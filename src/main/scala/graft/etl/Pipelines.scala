@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,8 +13,16 @@ import graft.etl.DqEngine.Rule
 import graft.functions.Cleaning
 import graft.io.Sinks
 
-/** One ETL run's output: cleaned staging frame + its DQ log + audit entry. */
-final case class EtlResult(staging: DataFrame, dqLog: DataFrame, audit: AuditEntry)
+/** One ETL run's output: cleaned staging rows, their DQ log and the audit
+  * entry. `staging` and `dqLog` are cached: both read the pipeline's one
+  * cached frame (filled by the audit counts), so consuming them re-reads no
+  * input and re-evaluates no rule. The caller releases that cache with
+  * [[release]] (or `spark.catalog.clearCache()`) once done with both. */
+final case class EtlResult(staging: DataFrame, dqLog: DataFrame, audit: AuditEntry)(
+    cached: DataFrame) {
+  /** Drop the cached frame behind `staging` and `dqLog`. */
+  def release(): Unit = cached.unpersist()
+}
 
 /** The three departmental clean→staging pipelines, re-expressing
   * /root/reference/02_Extract_and_transform_raw_data/ET_combined.py
@@ -20,46 +32,50 @@ final case class EtlResult(staging: DataFrame, dqLog: DataFrame, audit: AuditEnt
   * combined_dw_schema.sql:156,172,184-185); types land in the final select.
   *
   * Each pipeline is a pure DataFrame → (DataFrame, DataFrame, AuditEntry)
-  * function; [[Etl.runAll]] orchestrates the three and owns all writes
-  * (staging via overwrite-swap, logs via append) — the reference's
-  * `if_exists="replace"` / `"append"` split.
+  * function with one materialization: the input is read once, every rule
+  * runs in one projection chain, and the staged rows, the DQ log and the
+  * audit counts come from one cached frame. [[Etl.runAll]] runs the three
+  * concurrently and owns all writes (staging via overwrite-swap, logs via
+  * append) — the reference's `if_exists="replace"` / `"append"` split.
   */
 object Etl {
 
-  private def rawCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+  /** Raw header layouts, all columns string-typed. A file whose header
+    * differs fails its read (`enforceSchema=false`) instead of being read
+    * positionally under the wrong names. */
+  private val HrColumns = Seq("EmployeeID", "Name", "Department", "Gender",
+    "DateOfJoining", "ManagerID", "Salary", "Status")
+  private val FinanceColumns = Seq("EmployeeID", "ExpenseType", "ExpenseAmount",
+    "ExpenseDate", "ApprovedBy")
+  private val OpsColumns = Seq("Department", "ProcessName", "DowntimeHours",
+    "ProcessDate", "Location")
+
+  /** Header CSV read with its known schema: no header-sniffing job. */
+  private def rawCsv(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
+    spark.read.schema(StructType(columns.map(StructField(_, StringType))))
+      .option("header", "true").option("enforceSchema", "false").csv(path)
 
   private val dec12_2 = DecimalType(12, 2)
 
+  /** `df` plus a 1-based `name` column numbering its rows in partition
+    * order — line order for a file scan — without moving them: one job
+    * counts the rows of each partition, then each row adds its partition's
+    * offset to its index within the partition (the low 33 bits of
+    * monotonically_increasing_id). For an input whose partitions every
+    * evaluation reproduces (a file scan, a local relation) the count and
+    * the numbering see the same partitions. */
+  private def withPosition(df: DataFrame, name: String): DataFrame = {
+    val sizes = df.select(lit(1)).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.size.toLong)).collect()
+    val offsets = sizes.scanLeft(0L)(_ + _).init
+    df.withColumn(name, element_at(typedLit(offsets), spark_partition_id() + 1) +
+      (monotonically_increasing_id().bitwiseAND((1L << 33) - 1)) + 1)
+  }
+
   // ------------------------------------------------------------------- HR
-  /** A2_hr_etl.py / ET_combined.py:10-163. Fallback EmployeeID `TEMP_{n}`
-    * uses a global row_number — single-partition by design: raw seed files
-    * are driver-small; a 100 TB ingest would use a key-based reference
-    * instead (SURVEY §7 row-order hard part). */
-  def hr(spark: SparkSession, rawPath: String, ctx: JobContext): EtlResult =
-    hrFrame(spark, rawCsv(spark, rawPath), ctx)
-
-  /** Same pipeline over an already-ingested raw frame (all-string columns,
-    * header promoted) — the [[graft.sources.Xlsx]] path enters here, so
-    * workbook and CSV ingest share every rule downstream. */
-  def hrFrame(spark: SparkSession, raw: DataFrame, ctx: JobContext): EtlResult = {
-    // TEMP ids for missing EmployeeID before rules (A2_hr_etl.py:80-86)
-    val wAll = Window.orderBy(monotonically_increasing_id())
-    // cached: the DQ-log branch and the staging branch both read __n, and
-    // monotonically_increasing_id is only stable within one evaluation —
-    // re-evaluating per branch could log a TEMP id that differs from the
-    // staged one. The cache pins a single assignment (seed files are small).
-    val withId = raw.withColumn("__n", row_number().over(wAll)).cache()
-    val ref = col("EmployeeID")
-    val idFixed = withId.withColumn("EmployeeID",
-      when(ref.isNull || trim(ref) === "", concat(lit("TEMP_"), col("__n")))
-        .otherwise(trim(ref)))
-    val tempLog = withId.filter(ref.isNull || trim(ref) === "").select(
-      DqLog.entry(ctx, "staging_employee", "EmployeeID",
-        concat(lit("TEMP_"), col("__n")), ref, "missing_employee_id"): _*)
-
+  private[graft] val hrRules: Seq[Rule] = {
     val salary = Cleaning.coerceDecimal(col("Salary"))
-    val rules = Seq(
+    Seq(
       Rule("Gender",
         // explicit isNull: for null input the isin-negation is NULL (not
         // true), which would silently skip the DQ log while the fix still
@@ -90,37 +106,51 @@ object Etl {
         col("Status").isNull ||
           !upper(trim(col("Status"))).isin("ACTIVE", "RESIGNED"),
         Cleaning.statusNormalize(col("Status")), "unknown_status"))
-    val (cleaned, ruleLog) =
-      DqEngine.clean(idFixed.drop("__n"), "staging_employee", col("EmployeeID"), rules, ctx)
+  }
 
-    val typed = cleaned.select(
-      col("EmployeeID").as("employee_id"),
-      col("Name").as("name"),
-      col("Department").as("department"),
-      col("Gender").as("gender"),
-      col("DateOfJoining").cast(DateType).as("date_of_joining"),
-      col("ManagerID").as("manager_id"),
-      col("Salary").cast(dec12_2).as("salary"),
-      col("Status").as("status"))
-    val (staged, dupLog) = DqEngine.dedupWithLog(
-      typed, "staging_employee", col("employee_id"), col("employee_id"), ctx)
+  private[graft] val hrStaged: Seq[Column] = Seq(
+    col("EmployeeID").as("employee_id"),
+    col("Name").as("name"),
+    col("Department").as("department"),
+    col("Gender").as("gender"),
+    col("DateOfJoining").cast(DateType).as("date_of_joining"),
+    col("ManagerID").as("manager_id"),
+    col("Salary").cast(dec12_2).as("salary"),
+    col("Status").as("status"))
 
-    val dq = tempLog.unionByName(ruleLog).unionByName(dupLog)
-    finish(ctx, "staging_employee", staged, dq)
+  /** A2_hr_etl.py / ET_combined.py:10-163. */
+  def hr(spark: SparkSession, rawPath: String, ctx: JobContext): EtlResult =
+    hrFrame(spark, rawCsv(spark, rawPath, HrColumns), ctx)
+
+  /** Same pipeline over an already-ingested raw frame (all-string columns,
+    * header promoted) — the [[graft.sources.Xlsx]] path enters here, so
+    * workbook and CSV ingest share every rule downstream.
+    *
+    * A missing EmployeeID falls back to `TEMP_{n}`, n the row's 1-based
+    * position in the raw frame (A2_hr_etl.py:80-86), numbered from
+    * per-partition row counts ([[withPosition]]), so the rows stay spread
+    * over the scan's partitions. Positions follow the raw frame's
+    * partitions, which a file scan or a local relation reproduces on every
+    * evaluation; staged rows and log entries agree in any case, as both
+    * read the one cached frame. */
+  def hrFrame(spark: SparkSession, raw: DataFrame, ctx: JobContext): EtlResult = {
+    val table = "staging_employee"
+    val ref = col("EmployeeID")
+    val missing = ref.isNull || trim(ref) === ""
+    val tempId = concat(lit("TEMP_"), col("__n").cast(StringType))
+    val idFixed = withPosition(raw, "__n").select(raw.columns.toSeq.map { c =>
+      if (c == "EmployeeID") when(missing, tempId).otherwise(trim(ref)).as(c) else col(c)
+    } :+ DqEngine.logEntry(missing, ctx, table, "EmployeeID", tempId, ref,
+      "missing_employee_id").as("__dq_id"): _*)
+
+    val (cleaned, ruleLogs) = DqEngine.clean(idFixed, table, ref, hrRules, ctx)
+    DqEngine.finishDeduped(ctx, table, cleaned, hrStaged, col("__dq_id") +: ruleLogs)
   }
 
   // -------------------------------------------------------------- Finance
-  /** ET_combined.py:165-279 + B2_finance_etl.py (the deduping standalone
-    * variant — ET_combined.py:232's no-op dedup is a documented reference
-    * bug, SURVEY §7). Negative amounts are KEPT and flagged is_refund. */
-  def finance(spark: SparkSession, rawPath: String, ctx: JobContext): EtlResult = {
-    val raw = rawCsv(spark, rawPath)
+  private[graft] val financeRules: Seq[Rule] = {
     val amount = Cleaning.coerceDecimal(col("ExpenseAmount"))
-    // silent typo remap (B2_finance_etl.py:18 — fix without DQ log)
-    val typoFixed = raw.withColumn("ExpenseType",
-      when(initcap(trim(col("ExpenseType"))) === "Travell", "Travel")
-        .otherwise(initcap(trim(col("ExpenseType")))))
-    val rules = Seq(
+    Seq(
       Rule("ExpenseType",
         col("ExpenseType").isNull || trim(col("ExpenseType")) === "",
         Cleaning.nullNormalize(col("ExpenseType"), "Unknown"), "missing_expense_type"),
@@ -134,23 +164,61 @@ object Etl {
         col("ApprovedBy").isNull || upper(trim(col("ApprovedBy"))).isin("", "NAN", "NULL"),
         Cleaning.nullNormalize(Cleaning.stripFloatSuffix(trim(col("ApprovedBy"))), "UNKNOWN"),
         "missing_approver"))
-    val (cleaned, ruleLog) =
-      DqEngine.clean(typoFixed, "staging_finance", col("EmployeeID"), rules, ctx)
+  }
 
-    val typed = cleaned.select(
-      col("EmployeeID").as("employee_id"),
-      col("ExpenseType").as("expense_type"),
-      col("ExpenseAmount").cast(dec12_2).as("expense_amount"),
-      col("ExpenseDate").cast(DateType).as("expense_date"),
-      col("ApprovedBy").as("approved_by"))
-      .withColumn("is_refund", col("expense_amount") < 0)
-    val (staged, dupLog) = DqEngine.dedupWithLog(
-      typed, "staging_finance", col("employee_id"), col("employee_id"), ctx)
+  /** Silent typo remap (B2_finance_etl.py:18 — fix without DQ log). */
+  private[graft] val financeTypoFix: Column =
+    when(initcap(trim(col("ExpenseType"))) === "Travell", "Travel")
+      .otherwise(initcap(trim(col("ExpenseType"))))
 
-    finish(ctx, "staging_finance", staged, ruleLog.unionByName(dupLog))
+  private[graft] val financeStaged: Seq[Column] = Seq(
+    col("EmployeeID").as("employee_id"),
+    col("ExpenseType").as("expense_type"),
+    col("ExpenseAmount").cast(dec12_2).as("expense_amount"),
+    col("ExpenseDate").cast(DateType).as("expense_date"),
+    col("ApprovedBy").as("approved_by"),
+    (col("ExpenseAmount").cast(dec12_2) < 0).as("is_refund"))
+
+  /** ET_combined.py:165-279 + B2_finance_etl.py (the deduping standalone
+    * variant — ET_combined.py:232's no-op dedup is a documented reference
+    * bug, SURVEY §7). Negative amounts are KEPT and flagged is_refund. */
+  def finance(spark: SparkSession, rawPath: String, ctx: JobContext): EtlResult = {
+    val table = "staging_finance"
+    val typoFixed = rawCsv(spark, rawPath, FinanceColumns)
+      .withColumn("ExpenseType", financeTypoFix)
+    val (cleaned, ruleLogs) =
+      DqEngine.clean(typoFixed, table, col("EmployeeID"), financeRules, ctx)
+    DqEngine.finishDeduped(ctx, table, cleaned, financeStaged, ruleLogs)
   }
 
   // ----------------------------------------------------------- Operations
+  private[graft] val opsRules: Seq[Rule] = Seq(
+    Rule("Department",
+      col("Department").isNull || upper(trim(col("Department"))).isin("", "NAN", "NULL"),
+      Cleaning.nullNormalize(upper(trim(col("Department"))), "UNASSIGNED_DEPT"),
+      "missing_department"),
+    Rule("ProcessName",
+      col("ProcessName").isNull || upper(trim(col("ProcessName"))).isin("", "NAN", "NULL"),
+      Cleaning.nullNormalize(upper(trim(col("ProcessName"))), "UNKNOWN_PROCESS"),
+      "missing_process"),
+    Rule("Location",
+      col("Location").isNull || upper(trim(col("Location"))).isin("", "NAN", "NULL"),
+      Cleaning.nullNormalize(upper(trim(col("Location"))), "UNKNOWN_LOCATION"),
+      "missing_location"),
+    Rule("ProcessDate",
+      Cleaning.dateSafe(col("ProcessDate"), None).isNull,
+      Cleaning.dateSafe(col("ProcessDate"), Some("1957-01-01")), "invalid_date"))
+
+  /** Raw downtime as decimal; null where missing or unparseable. */
+  private[graft] val opsHours: Column = Cleaning.coerceDecimal(col("DowntimeHours"), 10, 2)
+
+  private[graft] val opsStaged: Seq[Column] = Seq(
+    col("Department").as("department_name"),
+    col("ProcessName").as("process_name"),
+    col("Location").as("location_name"),
+    col("DowntimeHours").as("downtime_hours"),
+    col("ProcessDate").cast(DateType).as("process_date"))
+
   /** ET_combined.py:282-428. Missing downtime is group-mean imputed over
     * (department, process, location) — the J9 window+coalesce formulation
     * (C2_ops_etl.py:61-85; dbt stg_ops_downtime.sql:27-47): one shuffle on
@@ -158,74 +226,59 @@ object Etl {
     * 1957-01-01 (the Ops-specific semantics; HR/Finance fall back to null).
     */
   def ops(spark: SparkSession, rawPath: String, ctx: JobContext): EtlResult = {
-    val raw = rawCsv(spark, rawPath)
-    val rules = Seq(
-      Rule("Department",
-        col("Department").isNull || upper(trim(col("Department"))).isin("", "NAN", "NULL"),
-        Cleaning.nullNormalize(upper(trim(col("Department"))), "UNASSIGNED_DEPT"),
-        "missing_department"),
-      Rule("ProcessName",
-        col("ProcessName").isNull || upper(trim(col("ProcessName"))).isin("", "NAN", "NULL"),
-        Cleaning.nullNormalize(upper(trim(col("ProcessName"))), "UNKNOWN_PROCESS"),
-        "missing_process"),
-      Rule("Location",
-        col("Location").isNull || upper(trim(col("Location"))).isin("", "NAN", "NULL"),
-        Cleaning.nullNormalize(upper(trim(col("Location"))), "UNKNOWN_LOCATION"),
-        "missing_location"),
-      Rule("ProcessDate",
-        Cleaning.dateSafe(col("ProcessDate"), None).isNull,
-        Cleaning.dateSafe(col("ProcessDate"), Some("1957-01-01")), "invalid_date"))
-    val (cleaned, ruleLog) =
-      DqEngine.clean(raw, "staging_operations", col("Department"), rules, ctx)
-
-    val hours = Cleaning.coerceDecimal(col("DowntimeHours"), 10, 2)
+    val table = "staging_operations"
+    val (cleaned, ruleLogs) = DqEngine.clean(
+      rawCsv(spark, rawPath, OpsColumns), table, col("Department"), opsRules, ctx)
+    val imputeLog = DqEngine.logEntry(opsHours.isNull, ctx, table, "DowntimeHours",
+      col("Department"), col("DowntimeHours"), "imputed_downtime")
     val grp = Window.partitionBy(col("Department"), col("ProcessName"), col("Location"))
-    val groupMean = round(avg(hours).over(grp), 2)
-    val imputeLog = cleaned.filter(hours.isNull).select(
-      DqLog.entry(ctx, "staging_operations", "DowntimeHours",
-        col("Department"), col("DowntimeHours"), "imputed_downtime"): _*)
-    val imputed = cleaned.withColumn("DowntimeHours",
-      coalesce(hours, groupMean.cast(DecimalType(10, 2)), lit(0).cast(DecimalType(10, 2))))
-
-    val staged = imputed.select(
-      col("Department").as("department_name"),
-      col("ProcessName").as("process_name"),
-      col("Location").as("location_name"),
-      col("DowntimeHours").as("downtime_hours"),
-      col("ProcessDate").cast(DateType).as("process_date"))
-    finish(ctx, "staging_operations", staged, ruleLog.unionByName(imputeLog))
-  }
-
-  private def finish(ctx: JobContext, table: String,
-                     staged: DataFrame, dq: DataFrame): EtlResult = {
-    // cache before the audit counts: staging and log are each consumed
-    // again by the caller's writes (runAll) — without this the raw CSV is
-    // re-read and every rule re-evaluated 4×. Lives for the job; Spark
-    // evicts LRU if memory is needed.
-    val stagedC = staged.cache()
-    val dqC = dq.cache()
-    val processed = stagedC.count()
-    val failed = dqC.count()
-    EtlResult(stagedC, dqC,
-      AuditEntry.of(ctx, table, "extract_transform", processed, failed,
-        s"$table cleaned: $processed rows staged, $failed DQ issues"))
+    val imputed = cleaned.withColumn("__dq_impute", imputeLog)
+      .withColumn("DowntimeHours", coalesce(opsHours,
+        round(avg(opsHours).over(grp), 2).cast(DecimalType(10, 2)),
+        lit(0).cast(DecimalType(10, 2))))
+    DqEngine.finish(ctx, table, imputed, opsStaged, ruleLogs :+ col("__dq_impute"))
   }
 
   // ----------------------------------------------------------- orchestrator
   /** ET_combined.py:435-439: one job id, three pipelines, staging replaced,
-    * logs appended. `warehouseDir` layout: stg/<table>, logs/{dq,audit}. */
+    * logs appended. `warehouseDir` layout: stg/<table>, logs/{dq,audit}.
+    *
+    * The pipelines and their staging swaps run concurrently on a pool of
+    * one thread per pipeline, created and shut down here; the threads
+    * inherit the caller's SparkContext local properties (job group, pool,
+    * tags). The DQ logs and audit entries of all three are then appended
+    * in one write each. A failure is rethrown after all three finished. */
   def runAll(spark: SparkSession, rawDir: String, warehouseDir: String,
              ctx: JobContext = JobContext.fresh()): Seq[EtlResult] = {
-    val runs = Seq(
-      "staging_employee" -> hr(spark, s"$rawDir/HR_Dataset_Dirty.csv", ctx),
-      "staging_finance" -> finance(spark, s"$rawDir/Finance_Dataset_Dirty.csv", ctx),
-      "staging_operations" -> ops(spark, s"$rawDir/Operations_Dataset_Dirty.csv", ctx))
-    runs.foreach { case (table, r) =>
-      Sinks.overwriteSwap(r.staging, s"$warehouseDir/stg/$table")
-      Sinks.appendParquet(r.dqLog, s"$warehouseDir/logs/data_quality_log")
-      Sinks.appendParquet(
-        AuditEntry.toDf(spark, ctx, Seq(r.audit)), s"$warehouseDir/logs/audit_log")
+    val pipelines: Seq[(String, () => EtlResult)] = Seq(
+      "staging_employee" -> (() => hr(spark, s"$rawDir/HR_Dataset_Dirty.csv", ctx)),
+      "staging_finance" -> (() => finance(spark, s"$rawDir/Finance_Dataset_Dirty.csv", ctx)),
+      "staging_operations" -> (() => ops(spark, s"$rawDir/Operations_Dataset_Dirty.csv", ctx)))
+    val pool = Executors.newFixedThreadPool(pipelines.size)
+    val outcomes = try {
+      val futures = pipelines.map { case (table, run) =>
+        pool.submit(new Callable[EtlResult] {
+          def call(): EtlResult = {
+            val r = run()
+            Sinks.overwriteSwap(r.staging, s"$warehouseDir/stg/$table")
+            r
+          }
+        })
+      }
+      futures.map(f => Try(f.get()))
+    } finally pool.shutdown()
+    outcomes.collectFirst { case Failure(e) =>
+      outcomes.foreach(_.foreach(_.release()))
+      throw (e match {
+        case x: ExecutionException if x.getCause != null => x.getCause
+        case x => x
+      })
     }
-    runs.map(_._2)
+    val results = outcomes.map(_.get)
+    Sinks.appendParquet(results.map(_.dqLog).reduce(_ unionByName _),
+      s"$warehouseDir/logs/data_quality_log")
+    Sinks.appendParquet(AuditEntry.toDf(spark, ctx, results.map(_.audit)),
+      s"$warehouseDir/logs/audit_log")
+    results
   }
 }

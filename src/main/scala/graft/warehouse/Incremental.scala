@@ -127,21 +127,20 @@ object Incremental {
     val spark = candidates.sparkSession
     val hwm = readWatermark(spark, statePath, table)
 
-    // cache once: the lineage (CSV parse + cleaning, typically) is
-    // otherwise evaluated three times for the stats counters alone
-    val cand = candidates.cache()
-    val nCand = cand.count()
-    val withPart = cand.filter(col(partCol).isNotNull)
-    val nNullPart = nCand - withPart.count()
-    val fresh = hwm match {
-      // `>=` deliberately re-admits watermark-day rows (same-day late
-      // arrivals); the tail anti-dedup below makes the replay safe. Do NOT
-      // tighten to `>`: that permanently drops a new order landing on the
-      // watermark date.
-      case Some(w) => withPart.filter(col(partCol) >= lit(w).cast(DateType))
-      case None    => withPart
+    // `>=` deliberately re-admits watermark-day rows (same-day late
+    // arrivals); the tail anti-dedup below makes the replay safe. Do NOT
+    // tighten to `>`: that permanently drops a new order landing on the
+    // watermark date.
+    val isFresh = hwm.foldLeft(col(partCol).isNotNull) { (p, w) =>
+      p && col(partCol) >= lit(w).cast(DateType)
     }
-    val nFresh = fresh.count()
+    // cached once: the counters aggregate fills it and the dedup below
+    // reads it, so the lineage (CSV parse + cleaning + FK join, typically)
+    // runs once. All three counters come from that one aggregate.
+    val cand = candidates.cache()
+    val c = cand.agg(count(lit(1)), count(col(partCol)), count(when(isFresh, 1))).head()
+    val (nCand, nNullPart, nFresh) = (c.getLong(0), c.getLong(0) - c.getLong(1), c.getLong(2))
+    val fresh = cand.filter(isFresh)
 
     val fs = new Path(factPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -149,16 +148,15 @@ object Incremental {
       if (fs.exists(new Path(factPath)))
         Facts.antiDedup(fresh, tailScan(spark, factPath, partCol, hwm), keyCols)
       else fresh
-    // Materialize counts AND the new max BEFORE appending: writing to
-    // factPath invalidates any cached plan that reads it (Spark recaches
-    // by path), so post-append the dedup plan would recompute against the
+    // Materialize the count AND the new max BEFORE appending, in one
+    // aggregate that also fills the cache the append reads: writing to
+    // factPath invalidates any cached plan that reads it (Spark recaches by
+    // path), so post-append the dedup plan would recompute against the
     // already-appended fact and dedup itself to empty.
     val rows = deduped.cache()
-    val nNew = rows.count()
-    val newMax: Option[String] =
-      if (nNew > 0)
-        Option(rows.agg(max(col(partCol)).cast(StringType)).collect()(0).getString(0))
-      else None
+    val r = rows.agg(count(lit(1)), max(col(partCol)).cast(StringType)).head()
+    val nNew = r.getLong(0)
+    val newMax: Option[String] = Option(r.getString(1))
 
     if (nNew > 0) {
       rows
