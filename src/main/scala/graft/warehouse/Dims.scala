@@ -1,9 +1,9 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.etl.JobContext
 
@@ -31,13 +31,14 @@ object Dims {
     current.unionByName(appended)
   }
 
-  /** Fresh name dimension from scratch (dbt dims/dim_department.sql:4-9). */
-  def buildNameDim(names: DataFrame, nameCol: String, idCol: String): DataFrame =
-    names.select(trim(col(nameCol)).as(nameCol))
-      .filter(col(nameCol).isNotNull && col(nameCol) =!= "")
-      .distinct()
-      .withColumn(idCol, row_number().over(Window.orderBy(col(nameCol))))
-      .select(col(idCol), col(nameCol))
+  /** Fresh name dimension from scratch (dbt dims/dim_department.sql:4-9):
+    * the upsert into an empty dimension. */
+  def buildNameDim(names: DataFrame, nameCol: String, idCol: String): DataFrame = {
+    val empty = StructType(Seq(
+      StructField(idCol, IntegerType), StructField(nameCol, StringType)))
+    upsertNameDim(names.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[Row](), empty), names, nameCol, idCol)
+  }
 }
 
 object Facts {
@@ -61,12 +62,4 @@ object Facts {
         ctx, table, fkCol, col(fkCol), col(fkCol), "fk_miss"): _*)
     (enriched, misses)
   }
-
-  /** Incremental append dedup (J6: NOT EXISTS anti-join on the natural key
-    * columns, TL_combine.sql:189-203): candidates minus rows already in the
-    * fact. At 100 TB the existing side must be bounded by the incremental
-    * watermark / partition predicate before this join (SURVEY §4). */
-  def antiDedup(candidates: DataFrame, existing: DataFrame,
-                keyCols: Seq[String]): DataFrame =
-    candidates.join(existing.select(keyCols.map(col): _*), keyCols, "left_anti")
 }

@@ -17,11 +17,14 @@ import graft.io.Sinks
   * (one row per fact), so each batch pays:
   *   - O(1): read the state row;
   *   - O(batch): filter candidates above the watermark;
-  *   - O(tail): anti-join dedup against ONLY the fact partitions at/after
-  *     the watermark — facts are written `partitionBy(p_year, p_month)`
-  *     derived from `part_col`, so the existing-side read
-  *     partition-prunes to the overlap window instead of scanning
-  *     history (TL_combine.sql:189-203 semantics, bounded).
+  *   - O(tail): one left join of the candidates with the distinct key
+  *     tuples of ONLY the fact partitions at/after the watermark, which
+  *     flags the rows the fact already holds — facts are written
+  *     `partitionBy(p_year, p_month)` derived from `part_col`, so the
+  *     existing-side read partition-prunes to the overlap window instead
+  *     of scanning history (TL_combine.sql:189-203 semantics, bounded);
+  *   - one cached frame and one aggregate for every count and the new
+  *     watermark, then the append of its new rows.
   *
   * The dedup window assumption (late data never arrives more than one
   * watermark behind) is the standard incremental contract; widen the tail
@@ -44,8 +47,8 @@ object Incremental {
       .collect().headOption.flatMap(r => Option(r.getString(1)))
   }
 
-  private def writeWatermark(spark: SparkSession, statePath: String,
-                             table: String, value: String): Unit = {
+  private[graft] def writeWatermark(spark: SparkSession, statePath: String,
+                                    table: String, value: String): Unit = {
     import scala.jdk.CollectionConverters._
     val others =
       if (new Path(statePath).getFileSystem(
@@ -79,7 +82,7 @@ object Incremental {
   private[graft] val YearCol = "p_year"
   private[graft] val MonthCol = "p_month"
 
-  /** The existing-fact tail the anti-dedup compares against: only
+  /** The existing-fact tail that candidates are matched against: only
     * partitions at/after the watermark's (year, month). The prune
     * predicate references ONLY the physical partition columns, so it
     * resolves at planning time to a partition-list prune — the scan
@@ -117,10 +120,11 @@ object Incremental {
   }
 
   /** Append `candidates` to the partitioned fact at `factPath`:
-    * watermark-filter → tail-bounded anti-dedup on `keyCols` → append →
-    * advance watermark. `partCol` must be a DateType column; the
-    * physical partition keys are its derived (p_year, p_month) and the
-    * column itself stays in the data files. */
+    * watermark filter → drop rows whose `keyCols` match the tail-bounded
+    * existing fact (NOT EXISTS, TL_combine.sql:189-203) → append → advance
+    * watermark. `partCol` must be a DateType column; the physical
+    * partition keys are its derived (p_year, p_month) and the column
+    * itself stays in the data files. */
   def appendIncremental(candidates: DataFrame, factPath: String,
                         statePath: String, table: String,
                         partCol: String, keyCols: Seq[String]): LoadStats = {
@@ -128,40 +132,39 @@ object Incremental {
     val hwm = readWatermark(spark, statePath, table)
 
     // `>=` deliberately re-admits watermark-day rows (same-day late
-    // arrivals); the tail anti-dedup below makes the replay safe. Do NOT
+    // arrivals); the tail match below makes the replay safe. Do NOT
     // tighten to `>`: that permanently drops a new order landing on the
     // watermark date.
     val isFresh = hwm.foldLeft(col(partCol).isNotNull) { (p, w) =>
       p && col(partCol) >= lit(w).cast(DateType)
     }
-    // cached once: the counters aggregate fills it and the dedup below
-    // reads it, so the lineage (CSV parse + cleaning + FK join, typically)
-    // runs once. All three counters come from that one aggregate.
-    val cand = candidates.cache()
-    val c = cand.agg(count(lit(1)), count(col(partCol)), count(when(isFresh, 1))).head()
-    val (nCand, nNullPart, nFresh) = (c.getLong(0), c.getLong(0) - c.getLong(1), c.getLong(2))
-    val fresh = cand.filter(isFresh)
-
+    // Fill the cache with every counter AND the new max BEFORE appending,
+    // in one aggregate: writing to factPath invalidates any cached plan
+    // that reads it (Spark recaches by path), so post-append the tail match
+    // would recompute against the already-appended fact and find every
+    // row old. A left join with the DISTINCT tail key tuples keeps the
+    // candidates one-to-one; an equi-join never matches a null key part,
+    // so such rows are always new, as under NOT EXISTS.
     val fs = new Path(factPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deduped =
-      if (fs.exists(new Path(factPath)))
-        Facts.antiDedup(fresh, tailScan(spark, factPath, partCol, hwm), keyCols)
-      else fresh
-    // Materialize the count AND the new max BEFORE appending, in one
-    // aggregate that also fills the cache the append reads: writing to
-    // factPath invalidates any cached plan that reads it (Spark recaches by
-    // path), so post-append the dedup plan would recompute against the
-    // already-appended fact and dedup itself to empty.
-    val rows = deduped.cache()
-    val r = rows.agg(count(lit(1)), max(col(partCol)).cast(StringType)).head()
-    val nNew = r.getLong(0)
-    val newMax: Option[String] = Option(r.getString(1))
+    val flagged = (
+      if (!fs.exists(new Path(factPath))) candidates.withColumn("__new", isFresh)
+      else candidates
+        .join(tailScan(spark, factPath, partCol, hwm).select(keyCols.map(col): _*)
+          .distinct().withColumn("__in_tail", lit(true)), keyCols, "left")
+        .withColumn("__new", isFresh && col("__in_tail").isNull)
+    ).cache()
+    val r = flagged.agg(count(lit(1)), count(col(partCol)), count(when(isFresh, 1)),
+      count(when(col("__new"), 1)), max(when(col("__new"), col(partCol))).cast(StringType))
+      .head()
+    val stats = LoadStats(r.getLong(0), r.getLong(0) - r.getLong(1), r.getLong(2), r.getLong(3))
+    val newMax: Option[String] = Option(r.getString(4))
 
-    if (nNew > 0) {
-      rows
-        .withColumn(YearCol, year(col(partCol)))
-        .withColumn(MonthCol, month(col(partCol)))
+    if (stats.appended > 0) {
+      // the using-join put the key columns first: restore the candidates' order
+      flagged.filter(col("__new"))
+        .select(candidates.columns.toSeq.map(col) ++ Seq(
+          year(col(partCol)).as(YearCol), month(col(partCol)).as(MonthCol)): _*)
         .write.mode("append").partitionBy(YearCol, MonthCol).parquet(factPath)
       // newMax is always defined here: null-partition rows were excluded
       // before the watermark filter, so appended rows carry real dates
@@ -173,8 +176,7 @@ object Incremental {
       }
       writeWatermark(spark, statePath, table, advanced)
     }
-    rows.unpersist()
-    cand.unpersist()
-    LoadStats(nCand, nNullPart, nFresh, nNew)
+    flagged.unpersist()
+    stats
   }
 }

@@ -84,7 +84,7 @@ class EtlScanSpec extends AnyFunSuite {
       "approved_by")
     val fin = results(1).staging.select(keys.map(col): _*)
     // first append builds the fact and the watermark; the second, of the
-    // same rows, runs the steady-state path: tail scan + anti-dedup
+    // same rows, runs the steady-state path: tail scan + key match
     val (_, incrJobs) = JobCount(spark) {
       Seq(1, 2).foreach(_ => Incremental.appendIncremental(fin, s"$wh/fact", s"$wh/state",
         "fact_expenses", "expense_date", keys))
@@ -92,8 +92,8 @@ class EtlScanSpec extends AnyFunSuite {
     results.foreach(_.release())
     info(s"runAll: $etlJobs jobs, two appendIncremental calls: $incrJobs jobs")
     // on this input the filter-per-rule engine's runAll submitted 33 jobs,
-    // and the five-counter appendIncremental 31 over the two calls
+    // and the two-cache appendIncremental 19 over the two calls
     assert(etlJobs < 33, s"runAll submitted $etlJobs jobs")
-    assert(incrJobs < 31, s"appendIncremental submitted $incrJobs jobs")
+    assert(incrJobs < 19, s"appendIncremental submitted $incrJobs jobs")
   }
 }

@@ -471,4 +471,30 @@ class PlanAuditSpec extends AnyFunSuite {
       plan.collect { case f: FileSourceScanExec => f }.isEmpty,
       s"the emitted plan must not rescan or shuffle anything\n$plan")
   }
+
+  test("SCD2 merge over a parquet dimension plans one join and scans the dimension once") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_scd2_plan").toString + "/dim"
+    val d0 = java.sql.Date.valueOf("2024-01-01")
+    graft.warehouse.Scd2.initial(Seq(("e1", "Ann", "IT"), ("e2", "Bob", "HR"))
+      .toDF("emp_id", "name", "dept"), "emp_id", Seq("name", "dept"), d0)
+      .write.parquet(dir)
+    for (invalidate <- Seq(false, true)) {
+      val merged = graft.warehouse.Scd2.merge(spark.read.parquet(dir),
+        Seq(("e1", "Ann", "LEGAL"), ("e3", "Cyn", "OPS")).toDF("emp_id", "name", "dept"),
+        "emp_id", Seq("name", "dept"), java.sql.Date.valueOf("2024-02-01"), invalidate)
+      val plan = merged.queryExecution.optimizedPlan
+      val joins = plan.collect { case j: Join => j }
+      val dimScans = plan.collect {
+        case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h
+      }
+      assert(joins.size == 1, s"expected one join, got ${joins.size}\n$plan")
+      assert(dimScans.size == 1 && plan.collectLeaves().size == 2,
+        s"expected the dimension scanned once beside the snapshot\n$plan")
+      // e1 expired + fresh, e2 kept (expired when invalidating), e3 fresh
+      assert(merged.count() == 4)
+    }
+  }
 }

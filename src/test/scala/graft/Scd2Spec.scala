@@ -2,10 +2,11 @@ package graft
 
 import java.sql.Date
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.{Etl, JobContext}
 import graft.warehouse.Scd2
 
 /** Unit + invariant tests for the SCD2 batch merge (TL_combine.sql:22-62
@@ -90,5 +91,36 @@ class Scd2Spec extends AnyFunSuite {
       Seq(("e1", "Ann", "IT")).toDF("emp_id", "name", "dept"),
       "emp_id", attrs, d1)
     assert(merged.filter($"emp_id" === "e1").count() == 2)
+  }
+
+  test("an employee listed twice with only the salary changed is versioned once") {
+    val ctx = JobContext("dup-job", d0)
+    val hrAttrs = Seq("name", "department", "gender", "date_of_joining", "manager_id")
+    def staged(lines: String*) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-hr-dup")
+      Etl.hr(spark, DirtyCsv.write(dir.resolve("hr.csv"), DirtyCsv.HrHeader,
+        lines).toString, ctx)
+    }
+    def current(df: DataFrame, id: String) =
+      df.filter($"employee_id" === id && $"is_current").count()
+
+    val first = staged("E1,Ann,IT,F,2020-01-01,1001,50000,Active",
+      "E1,Ann,IT,F,2020-01-01,1001,52000,Active",
+      "E2,Bob,HR,M,2020-01-01,1001,40000,Active")
+    assert(first.staging.count() == 3) // the full-row dedup keeps both E1 rows
+    val cur = Scd2.initial(first.staging, "employee_id", hrAttrs, d0).cache()
+    assert(current(cur, "E1") == 1 && cur.count() == 2)
+
+    // E1 changes department, new E3 appears, both listed twice
+    val second = staged("E1,Ann,LEGAL,F,2020-01-01,1001,50000,Active",
+      "E1,Ann,LEGAL,F,2020-01-01,1001,53000,Active",
+      "E2,Bob,HR,M,2020-01-01,1001,40000,Active",
+      "E3,Cyn,OPS,F,2021-01-01,1001,45000,Active",
+      "E3,Cyn,OPS,F,2021-01-01,1001,46000,Active")
+    val merged = Scd2.merge(cur, second.staging, "employee_id", hrAttrs, d1).cache()
+    assert(current(merged, "E1") == 1 && current(merged, "E3") == 1)
+    assert(merged.filter($"employee_id" === "E1").count() == 2) // one expired, one current
+    assert(merged.count() == 4)
+    Seq(first, second).foreach(_.release())
   }
 }
