@@ -27,9 +27,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // opt-in AQP dial (spark.graft.sketchDistinct) — inert until flagged
     ext.injectOptimizerRule(_ => SketchDistinctRewrite)
-    // stddev/variance window decomposition → routable sum/count shapes
-    // (always-on; spark.graft.windowVarianceDecompose=false restores the
-    // built-in Welford plan)
+    // stddev/variance window decomposition → routable sum/count shapes.
+    // This rule, the RANGE-frame collapse and the stack merge are
+    // always-on; spark.sql.optimizer.excludedRules turns one off by name
+    // (e.g. graft.plans.WindowVarianceDecompose restores the built-in
+    // Welford plan)
     ext.injectOptimizerRule(_ => WindowVarianceDecompose)
     ext.injectOptimizerRule(_ => RangeFrameCollapse)
     // stacked-window merge — one DistributedWindowExec per (partition,

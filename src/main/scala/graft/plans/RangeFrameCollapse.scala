@@ -28,9 +28,11 @@ import org.apache.spark.sql.types.LongType
   * there is cheap AND safe — while the fact-scale work is one partial
   * aggregation and one broadcast-size join.
   *
-  * Equivalence was pinned by OBSERVED WindowExec behavior
-  * (tools/ScratchRange): a NULL-order row's offset frame is exactly its
-  * own null peer run regardless of bounds (the collapsed null row sees
+  * Equivalence was pinned by OBSERVED WindowExec behavior on edge
+  * fixtures (RangeFrameCollapseSpec compares against the native plan on
+  * NULL order runs and empty frames): a NULL-order row's offset frame is
+  * exactly its own null peer run regardless of bounds (the collapsed
+  * null row sees
   * exactly itself under the replayed spec — same engine, same rule);
   * empty both-PRECEDING frames yield sum/min/max NULL but count 0, so
   * the composed count is `coalesce(sum(partial counts), 0)`; DESC and
@@ -63,13 +65,10 @@ import org.apache.spark.sql.types.LongType
   * crosses [[DistributedRankRewrite.AutoGlobalMinBytes]] AND column
   * stats prove the collapsed table small (distinct-count product over
   * (partition keys, order key) ≤ [[RangeFrameCollapse.MaxCollapsedGroups]]
-  * — the grouped-routing proof discipline). Kill switch
-  * `spark.graft.rangeFrameCollapse=false`. */
+  * — the grouped-routing proof discipline). To keep the native
+  * WindowExec plan, exclude the rule by name:
+  * `spark.sql.optimizer.excludedRules=graft.plans.RangeFrameCollapse`. */
 object RangeFrameCollapse extends Rule[LogicalPlan] {
-  /** Kill switch: `spark.graft.rangeFrameCollapse=false` keeps the
-    * native WindowExec plan. */
-  val Flag = "spark.graft.rangeFrameCollapse"
-
   /** Stats-proof bound on the collapsed table's row count (distinct
     * product over partition + order keys), mirroring the grouped
     * auto-routing bound. */
@@ -168,10 +167,7 @@ object RangeFrameCollapse extends Rule[LogicalPlan] {
       counts.flatten.product <= BigInt(MaxCollapsedGroups)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val on = java.lang.Boolean.parseBoolean(
-      conf.getConfString(Flag, "true").trim)
-    if (!on) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case w @ Window(exprs, parts, Seq(SortOrder(v: AttributeReference,
           dir, nullOrd, _)), child, hint)
@@ -260,5 +256,4 @@ object RangeFrameCollapse extends Rule[LogicalPlan] {
             Project((child.output ++ finalAliases).toSeq, joined)
         }
     }
-  }
 }

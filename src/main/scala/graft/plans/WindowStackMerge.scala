@@ -61,11 +61,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * earlier fixpoint iteration are caught by the [[DistributedWindow]]
   * patterns on the next.
   *
-  * Kill switch: `spark.graft.windowStackMerge=false` restores the
-  * stacked plan.
+  * To restore the stacked plan, exclude the rule by name:
+  * `spark.sql.optimizer.excludedRules=graft.plans.WindowStackMerge`.
   */
 object WindowStackMerge extends Rule[LogicalPlan] {
-  val Flag = "spark.graft.windowStackMerge"
 
   /** The merge decision + rebuild shared by the logical-`Window` and
     * [[DistributedWindow]] patterns. Returns the replacement plan, or
@@ -113,12 +112,7 @@ object WindowStackMerge extends Rule[LogicalPlan] {
     Some(Project(newPl, merged))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // parseBoolean never throws — a malformed conf value must not crash
-    // every query's optimization (the DistributedRankRewrite invariant)
-    val on = java.lang.Boolean.parseBoolean(
-      conf.getConfString(Flag, "true").trim)
-    if (!on) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       // Window over Project over Window, same spec — the decompose shape
       case w1 @ Window(we1, ps1, os1,
@@ -147,5 +141,4 @@ object WindowStackMerge extends Rule[LogicalPlan] {
           case _ => dw1
         }
     }
-  }
 }

@@ -52,14 +52,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *    emitting a negative variance or a NaN stddev). Warehouse measures
   *    should be decimal-typed — the exact path — as the reference's are.
   *
-  * Always-on (kill switch [[WindowVarianceDecompose.Flag]]): gating the
-  * rewrite on plan size would make the VALUE of stddev depend on how big
-  * the table is. DISTINCT / FILTER aggregate forms pass through untouched.
+  * Always-on: gating the rewrite on plan size would make the VALUE of
+  * stddev depend on how big the table is. DISTINCT / FILTER aggregate
+  * forms pass through untouched. To restore the built-in Welford plan,
+  * exclude the rule by name:
+  * `spark.sql.optimizer.excludedRules=graft.plans.WindowVarianceDecompose`.
   */
 object WindowVarianceDecompose extends Rule[LogicalPlan] {
-  /** Kill switch: `spark.graft.windowVarianceDecompose=false` restores
-    * the built-in Welford plan. */
-  val Flag = "spark.graft.windowVarianceDecompose"
 
   /** What one decomposable window expression needs: the (possibly
     * decimal-peeled) moment input, sample-vs-population, and whether the
@@ -162,7 +161,8 @@ object WindowVarianceDecompose extends Rule[LogicalPlan] {
     * order is `regr_*(y, x)`: the LEFT child is the dependent y, the
     * RIGHT the independent x (Spark `linearRegression.scala`; the NULL /
     * 1.0 contracts below were pinned by observed behavior on edge
-    * fixtures — tools/ScratchRegr — not assumed from source). The
+    * fixtures, not assumed from source; WindowVarianceDecomposeSpec's
+    * regr case re-checks them against the built-in plan). The
     * remaining five (`regr_count/avgx/avgy/sxx/syy`) arrive here already
     * analyzer-replaced (RuntimeReplaceableAggregate) as count / average /
     * [[RegrReplacement]] shapes the single-input paths handle. */
@@ -235,12 +235,7 @@ object WindowVarianceDecompose extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // parseBoolean never throws — a malformed conf value must not crash
-    // every query's optimization (the DistributedRankRewrite invariant)
-    val on = java.lang.Boolean.parseBoolean(
-      conf.getConfString(Flag, "true").trim)
-    if (!on) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case Window(exprs, parts, order, child, hint)
           if exprs.exists(e =>
@@ -582,5 +577,4 @@ object WindowVarianceDecompose extends Rule[LogicalPlan] {
         // columns and the moment bases stay internal to this subtree
         Project(projList.toSeq, newWindow)
     }
-  }
 }

@@ -693,8 +693,9 @@ object Embeddings {
     * implementations can disagree exactly at a .5 boundary (review
     * finding). The oracle replays the quantized ranking exactly.
     *
-    * Exchange budget (r12 VERDICT item 2 — measured in
-    * [[graft.tools.ProfileAnnMp]], numbers in BENCH_NOTES r13): the
+    * Exchange budget (r12 VERDICT item 2 — wall time and shuffle-write
+    * per formulation in BENCH_NOTES.md Round 13, "Mandate delivery"
+    * item 2): the
     * probe self-join replicates each query vector's payload 5× through
     * the probe exchange — that term is (probes+1)·n payloads and is NOT
     * the dominant one. The dominant term in the r12 shape was the
@@ -721,9 +722,8 @@ object Embeddings {
 
   /** The bucketed + probe-selected embedding frame (vec_id, embedding,
     * norm, bucket, probes) — probes = the nFlips single-bit flips plus
-    * home. Shared by [[annMpPairs]] and the variant profiler
-    * ([[graft.ProfileAnnMp]]). */
-  private[graft] def annMpEmb(s: SparkSession, dir: String,
+    * home. */
+  private def annMpEmb(s: SparkSession, dir: String,
                               np: Int, nFlips: Int): DataFrame =
     Tables.embeddings(s, dir)
       .withColumn("bucket", bucketCol("embedding", np))
@@ -746,9 +746,8 @@ object Embeddings {
       .select(col("vec_id"), col("embedding"), col("norm"), col("bucket"),
         col("probes"))
 
-  /** The scored multi-probe candidate pairs (vec_id, nn_id, cos_sim) —
-    * shared by [[qEmbedAnnMp]] and the variant profiler. */
-  private[graft] def annMpPairs(s: SparkSession, dir: String,
+  /** The scored multi-probe candidate pairs (vec_id, nn_id, cos_sim). */
+  private def annMpPairs(s: SparkSession, dir: String,
                                 np: Int, nFlips: Int): DataFrame = {
     val emb = annMpEmb(s, dir, np, nFlips)
     val l = emb.select(col("vec_id"), col("embedding"), col("norm"),
@@ -767,7 +766,7 @@ object Embeddings {
     * a candidate has ONE bucket and the probe keys are pairwise
     * distinct), with map-side combine instead of a pair-volume window
     * exchange. */
-  private[graft] def annMpBest(pairs: DataFrame): DataFrame =
+  private def annMpBest(pairs: DataFrame): DataFrame =
     pairs.groupBy(col("vec_id"))
       .agg(max(struct(col("cos_sim"), (-col("nn_id")).as("neg_nn"))).as("m"))
       .select(col("vec_id"), (-col("m.neg_nn")).as("nn_id"),

@@ -186,25 +186,6 @@ object Graph {
       .select($"node".as("p_partkey"), $"auth", $"hub")
   }
 
-  /** Iterative graph loops run on dim-bounded node/edge tables, so the
-    * session's fact-sized shuffle-partition count is pure per-round fixed
-    * cost (store/commit/schedule ×partitions ×rounds). Pin 8 partitions
-    * for the duration of a loop's in-builder materializations — the exact
-    * discipline (and rationale) of Streams.withStreamShuffle. Only jobs
-    * EXECUTED inside `body` see the override; plans merely built here and
-    * executed later read the session value at execution time.
-    *
-    * SINGLE-THREADED ASSUMPTION (review finding): the override is
-    * session-global for the duration of `body` — any query running
-    * concurrently on the same SparkSession would silently get 8-partition
-    * shuffles. Safe under the sequential Verify/Bench harness; if a
-    * concurrent harness ever appears, scope this with `s.newSession()`
-    * (per-session conf clone) instead. (r10: one implementation —
-    * [[graft.core.Sessions.withShuffleWidth]] — shared with the
-    * registry-level narrowing of the other loop queries below.) */
-  private def withFewShuffles[T](s: SparkSession)(body: => T): T =
-    graft.core.Sessions.withShuffleWidth(s, IterWidth)(body)
-
   /** Distinct undirected co-order edges (u < v): parts appearing in the
     * same order are connected. One self-join on the order key + one
     * distinct — both shuffles on natural keys. Shared by q_triangles,
@@ -1166,16 +1147,15 @@ object Graph {
     * moving after 14 rounds at sf0.01; the clamped one fixes in a
     * handful). est never drops below 1 (h = 1 needs one neighbor with
     * est ≥ 1, and every node in adj has ≥ 1 neighbor), so the CASE
-    * else-branch is 1. Returns the CACHED `(node, est)` table; callers
-    * unpersist when done.
+    * else-branch is 1. Returns a lazy `(node, est)` frame: nothing is
+    * cached or persisted, so callers have nothing to release.
     *
-    * Each round: one join of the persisted adjacency against the
-    * previous estimates plus one map-side-combinable conditional-count
-    * aggregate, both keyed on node id — no windows, no driver-side
-    * state beyond the per-round materialize. Each round re-roots on
-    * the physical RDD and persists, releasing the previous round — the
-    * same linear-lineage discipline as the pagerank family (a kept
-    * Catalyst tree would nest one subtree per round). */
+    * Each round: one join of the adjacency against the previous
+    * estimates plus one map-side-combinable conditional-count
+    * aggregate, both keyed on node id — no windows and no driver-side
+    * state. No round materializes: the loop only composes the plan, and
+    * the caller's terminal action runs all rounds as one DAG (the
+    * per-round adjacency exchange is reused across rounds). */
   private[graft] def corenessLabels(s: SparkSession, edges0: DataFrame,
                                     rounds: Int = CorenessRounds): DataFrame = {
       import s.implicits._
@@ -1211,8 +1191,9 @@ object Graph {
       est
     }
 
-  // measured (tools/ScratchCoreness): the clamped iterate is stable from
-  // round 1 at sf0.001/0.01/0.1 (the co-purchase graph is dense — most
+  // measured at r9 (each round count's labels against the previous
+  // count's): the clamped iterate is stable from round 1 at
+  // sf0.001/0.01/0.1 (the co-purchase graph is dense — most
   // nodes saturate at the cap), and stability at consecutive rounds IS
   // the exact fixpoint; 4 fixed rounds = 3 rounds of safety margin,
   // with Round9OpsSpec re-checking stability at +2 rounds every run
@@ -1447,15 +1428,15 @@ object Graph {
 
   /** The loop builders run under a narrowed shuffle width
     * ([[graft.core.Sessions.withShuffleWidth]], measured −15..−35% at
-    * sf0.1 in graft.tools.ScratchIter): a loop's per-round fixed cost
-    * scales with the width while every table it touches — node/frontier
+    * sf0.1, BENCH_NOTES.md Round 10 "Late-round additions"): a loop's
+    * per-round fixed cost scales with the width while every table it touches — node/frontier
     * vectors AND the co-purchase edge list (≈10⁵ rows at sf0.1) — is far
     * below one session-width partition's worth, so the session default
     * is pure overhead ×rounds. Results are unchanged by the family's
     * own shuffle-width-invariance pin (IterativePerturbationSpec). The
     * width is sized to the QUERY's data, which is the actual invariant:
     * a 100-TB deployment sizes the loop width to ITS edge list (up, not
-    * down) — the kcore precedent (withFewShuffles, r9). Only work
+    * down) — the r9 k-core precedent. Only work
     * EXECUTED inside the builder narrows (the eager per-round
     * persist+count); the returned frame's lazy tail plans under the
     * session width at action time. */

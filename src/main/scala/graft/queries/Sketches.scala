@@ -249,7 +249,8 @@ object Sketches {
     * and a 32-thread local run is CPU-bound with a free "shuffle". The
     * md5 is purely the cross-engine-replay tax (DuckDB must hash the
     * identical bytes), not the operator's cost: measured at sf0.1
-    * (graft.ProfileVariants, min-of-2 after warmup) the 6-column
+    * (min-of-2 after warmup; BENCH_NOTES.md Round 5, "Round-5
+    * additions", q_profile_approx) the 6-column
     * aggregate runs exact-distinct 1.09 s / md5-hash-alone 2.53 s /
     * md5+kmv 3.04 s / xxhash64+kmv 0.40 s — a production deployment
     * swaps the hash expression to `xxhash64(col)` (one line, same plan)

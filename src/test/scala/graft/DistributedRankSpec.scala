@@ -19,7 +19,7 @@ import graft.plans.{DistributedRank, DistributedRankRewrite, DistributedWindowEx
   * parity, and the prefix-satisfied-partitioning straddle (an order-peer
   * run spanning partitions when the child is already range-partitioned
   * on a FINER ordering — r9 ADVICE's latent wrong-sum). */
-class DistributedRankSpec extends AnyFunSuite {
+class DistributedRankSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = {
     val s = graft.core.Sessions.local(4, "graft-distrank-test")
     DistributedRank.install(s)
@@ -39,10 +39,8 @@ class DistributedRankSpec extends AnyFunSuite {
     df.withColumn("rn",
       row_number().over(Window.orderBy(col("v"), col("id"))))
 
-  private def withFlag[T](on: Boolean)(body: => T): T = {
-    spark.conf.set(DistributedRank.Flag, on.toString)
-    try body finally spark.conf.set(DistributedRank.Flag, "false")
-  }
+  private def withFlag[T](on: Boolean)(body: => T): T =
+    withConf(DistributedRank.Flag -> on.toString)(body)
 
   test("flag-on output equals the naive single-partition window") {
     val df = fixture(5000)
@@ -57,9 +55,9 @@ class DistributedRankSpec extends AnyFunSuite {
 
   test("physical plan: GlobalRankExec over a range exchange, no WindowExec") {
     val plan = withFlag(true) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try naiveRank(fixture(5000)).queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      withConf("spark.sql.adaptive.enabled" -> "false") {
+        naiveRank(fixture(5000)).queryExecution.executedPlan
+      }
     }
     assert(plan.collect { case g: GlobalRankExec => g }.nonEmpty,
       s"expected GlobalRankExec:\n$plan")
@@ -80,8 +78,7 @@ class DistributedRankSpec extends AnyFunSuite {
 
   test("scope guard: unsupported functions and mixed nodes untouched") {
     withFlag(true) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConf("spark.sql.adaptive.enabled" -> "false") {
         // collect_list is the canary: non-numeric output, no decompose
         // path — genuinely out of the operator's scope. (stddev was the
         // r12 canary; since WindowVarianceDecompose it legitimately
@@ -118,7 +115,7 @@ class DistributedRankSpec extends AnyFunSuite {
         assert(sdPlan.collect { case d: DistributedWindowExec => d }.nonEmpty
           && sdPlan.collect { case w: WindowExec => w }.isEmpty,
           s"decomposed stddev must route under the flag:\n$sdPlan")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
     }
   }
 
@@ -126,8 +123,7 @@ class DistributedRankSpec extends AnyFunSuite {
        "the session flag without stats proof (r9 ADVICE, narrowed r11 — " +
        "only the budgeted full-stats shapes must stay opt-in)") {
     withFlag(true) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConf("spark.sql.adaptive.enabled" -> "false") {
         // ntile/percent_rank need the driver's per-group totals map, so
         // absent statistics the flag alone must NOT opt a grouped one in
         // — the budget abort stays unreachable from the session dial
@@ -137,7 +133,7 @@ class DistributedRankSpec extends AnyFunSuite {
         assert(plan.collect { case w: WindowExec => w }.nonEmpty &&
           plan.collect { case e: DistributedWindowExec => e }.isEmpty,
           s"grouped size-based window must need the marker or stats:\n$plan")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
     }
   }
 
@@ -150,8 +146,7 @@ class DistributedRankSpec extends AnyFunSuite {
       .withColumn("rn", row_number().over(Window.orderBy(col("v"), col("id"))))
       .withColumn("cs", sum(col("v")).over(Window.orderBy(col("v"), col("id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       // tiny input under the default 128 MiB gate: stays WindowExec (the
       // dim-sized justified windows keep their faster single-task plan)
       val below = q().queryExecution.executedPlan
@@ -192,7 +187,7 @@ class DistributedRankSpec extends AnyFunSuite {
         assert(grouped.collect { case e: DistributedWindowExec => e }.isEmpty,
           s"unproven grouped windows stay flag/marker-routed:\n$grouped")
       } finally spark.conf.unset(AutoGlobalMinBytesKey)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("default-on gate routes a naive DECIMAL running sum (r14): the " +
@@ -203,15 +198,11 @@ class DistributedRankSpec extends AnyFunSuite {
       $"id", (($"id" % 97).cast("double") / 4).cast("decimal(12,2)").as("amt"))
       .withColumn("cs", sum(col("amt")).over(Window.orderBy(col("amt"), col("id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(AutoGlobalMinBytesKey, "1")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        AutoGlobalMinBytesKey -> "1") {
       val plan = q().queryExecution.executedPlan
       assert(plan.collect { case e: DistributedWindowExec => e }.nonEmpty,
         s"a size-gated global decimal sum must auto-route:\n$plan")
-    } finally {
-      spark.conf.unset(AutoGlobalMinBytesKey)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
     // value parity across the flip
     spark.conf.set(AutoGlobalMinBytesKey, "1")
@@ -229,63 +220,57 @@ class DistributedRankSpec extends AnyFunSuite {
     import spark.implicits._
     val warehouse = java.nio.file.Files
       .createTempDirectory("graft_auto_grouped").toString
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set(AutoGlobalMinBytesKey, "1")
-    try {
-      spark.range(2000).select(
-        $"id",
-        ($"id" % 3).as("lo"),
-        $"id".as("hi"),
-        (abs(hash($"id")) % 50).cast("long").as("v"))
-        .write.mode("overwrite")
-        .option("path", s"$warehouse/t").saveAsTable("graft_auto_t")
-      def grouped(key: String): DataFrame =
-        spark.table("graft_auto_t").withColumn("rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("v"), col("id"))))
-      // BEFORE ANALYZE: no column stats -> no proof -> WindowExec
-      val unproven = grouped("lo").queryExecution.executedPlan
-      assert(unproven.collect { case w: WindowExec => w }.nonEmpty &&
-        unproven.collect { case e: DistributedWindowExec => e }.isEmpty,
-        s"no stats must mean no default flip:\n$unproven")
-      spark.sql(
-        "ANALYZE TABLE graft_auto_t COMPUTE STATISTICS FOR COLUMNS lo, hi")
-      // proven-low (3 distinct): auto-routes with NO flag, NO marker
-      val proven = grouped("lo").queryExecution.executedPlan
-      assert(proven.collect { case e: DistributedWindowExec => e }.nonEmpty,
-        s"stats-proven low-cardinality grouped window must auto-route:\n$proven")
-      // value parity across the auto flip
-      val onRows = grouped("lo").collect().map(_.toString).sorted.toSeq
-      spark.conf.set(AutoKey, "false")
-      val offRows = try grouped("lo").collect().map(_.toString).sorted.toSeq
-        finally spark.conf.unset(AutoKey)
-      assert(onRows == offRows, "auto-routed grouped result must equal WindowExec")
-      // proven-HIGH (2000 distinct, threshold lowered): stays WindowExec
-      spark.conf.set(AutoGroupThresholdKey, "100")
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.cbo.enabled" -> "true", AutoGlobalMinBytesKey -> "1") {
       try {
-        val high = grouped("hi").queryExecution.executedPlan
-        assert(high.collect { case w: WindowExec => w }.nonEmpty &&
-          high.collect { case e: DistributedWindowExec => e }.isEmpty,
-          s"proven-high key must stay WindowExec:\n$high")
-      } finally spark.conf.unset(AutoGroupThresholdKey)
-      // kill switch: auto=false never routes, proof or not
-      spark.conf.set(AutoKey, "false")
-      try {
-        val killed = grouped("lo").queryExecution.executedPlan
-        assert(killed.collect { case e: DistributedWindowExec => e }.isEmpty,
-          s"auto=false must keep WindowExec:\n$killed")
-      } finally spark.conf.unset(AutoKey)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_auto_t")
-      spark.conf.unset(AutoGlobalMinBytesKey)
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.range(2000).select(
+          $"id",
+          ($"id" % 3).as("lo"),
+          $"id".as("hi"),
+          (abs(hash($"id")) % 50).cast("long").as("v"))
+          .write.mode("overwrite")
+          .option("path", s"$warehouse/t").saveAsTable("graft_auto_t")
+        def grouped(key: String): DataFrame =
+          spark.table("graft_auto_t").withColumn("rn", row_number().over(
+            Window.partitionBy(col(key)).orderBy(col("v"), col("id"))))
+        // BEFORE ANALYZE: no column stats -> no proof -> WindowExec
+        val unproven = grouped("lo").queryExecution.executedPlan
+        assert(unproven.collect { case w: WindowExec => w }.nonEmpty &&
+          unproven.collect { case e: DistributedWindowExec => e }.isEmpty,
+          s"no stats must mean no default flip:\n$unproven")
+        spark.sql(
+          "ANALYZE TABLE graft_auto_t COMPUTE STATISTICS FOR COLUMNS lo, hi")
+        // proven-low (3 distinct): auto-routes with NO flag, NO marker
+        val proven = grouped("lo").queryExecution.executedPlan
+        assert(proven.collect { case e: DistributedWindowExec => e }.nonEmpty,
+          s"stats-proven low-cardinality grouped window must auto-route:\n$proven")
+        // value parity across the auto flip
+        val onRows = grouped("lo").collect().map(_.toString).sorted.toSeq
+        spark.conf.set(AutoKey, "false")
+        val offRows = try grouped("lo").collect().map(_.toString).sorted.toSeq
+          finally spark.conf.unset(AutoKey)
+        assert(onRows == offRows, "auto-routed grouped result must equal WindowExec")
+        // proven-HIGH (2000 distinct, threshold lowered): stays WindowExec
+        spark.conf.set(AutoGroupThresholdKey, "100")
+        try {
+          val high = grouped("hi").queryExecution.executedPlan
+          assert(high.collect { case w: WindowExec => w }.nonEmpty &&
+            high.collect { case e: DistributedWindowExec => e }.isEmpty,
+            s"proven-high key must stay WindowExec:\n$high")
+        } finally spark.conf.unset(AutoGroupThresholdKey)
+        // kill switch: auto=false never routes, proof or not
+        spark.conf.set(AutoKey, "false")
+        try {
+          val killed = grouped("lo").queryExecution.executedPlan
+          assert(killed.collect { case e: DistributedWindowExec => e }.isEmpty,
+            s"auto=false must keep WindowExec:\n$killed")
+        } finally spark.conf.unset(AutoKey)
+      } finally spark.sql("DROP TABLE IF EXISTS graft_auto_t")
     }
   }
 
   test("tightened marker: a user column named __dist_rankings does NOT trigger") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val d = fixture(200).withColumn("__dist_rankings",
         row_number().over(Window.orderBy(col("v"), col("id"))))
       val plan = d.queryExecution.executedPlan
@@ -297,7 +282,7 @@ class DistributedRankSpec extends AnyFunSuite {
       assert(exact.queryExecution.executedPlan
         .collect { case g: GlobalRankExec => g }.nonEmpty,
         "reserved __dist_rank_<suffix> form must still trigger")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   // ------------------------------------------------------------- r9/r10:
@@ -332,14 +317,13 @@ class DistributedRankSpec extends AnyFunSuite {
     val on = marked.columns.filter(_.startsWith(s"${M}_"))
       .foldLeft(marked)((d, c) =>
         d.withColumnRenamed(c, c.stripPrefix(s"${M}_")))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = on.queryExecution.executedPlan
       assert(plan.collect { case e: DistributedWindowExec => e }.nonEmpty,
         s"expected DistributedWindowExec:\n$plan")
       assert(plan.collect { case w: WindowExec => w }.isEmpty,
         s"WindowExec must be gone:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     assert(on.collect().map(_.toString).sorted.toSeq == off,
       "marker result must equal the WindowExec result")
   }
@@ -469,8 +453,7 @@ class DistributedRankSpec extends AnyFunSuite {
 
   test("scope guard: over-budget lag/lead offsets and IGNORE-NULLS lead " +
        "stay WindowExec") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val w = Window.orderBy(col("v"), col("id"))
       val bigOff = fixture(200).withColumn(s"${M}_x",
         lag(col("v"), 100).over(w)) // > MaxLagOffset
@@ -488,7 +471,7 @@ class DistributedRankSpec extends AnyFunSuite {
       assert(ignNulls.queryExecution.executedPlan
         .collect { case e: DistributedWindowExec => e }.nonEmpty,
         "IGNORE NULLS lead routes to the distributed window (r12)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("lead(1) and lead(3) equal WindowExec, incl. NULL source values " +
@@ -988,8 +971,8 @@ class DistributedRankSpec extends AnyFunSuite {
        "shapes (boundary mode, abort-free) but keep size-based on " +
        "WindowExec; proven-low stats route size-based in (r11)") {
     import spark.implicits._
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try withFlag(true) {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        DistributedRank.Flag -> "true") {
       val df = fixture(500).withColumn("g",
         (abs(hash(col("id"))) % 3).cast("long"))
       // non-size-based grouped + flag, NO marker, no stats → rewrites
@@ -1006,7 +989,7 @@ class DistributedRankSpec extends AnyFunSuite {
         nt.queryExecution.executedPlan
           .collect { case d: DistributedWindowExec => d }.isEmpty,
         "flag-auto grouped size-based without stats must stay WindowExec")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("flag-auto grouped routing from CATALOG STATS alone: a proven-low " +
@@ -1015,43 +998,40 @@ class DistributedRankSpec extends AnyFunSuite {
     import spark.implicits._
     val warehouse = java.nio.file.Files
       .createTempDirectory("graft_route_stats").toString
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try withFlag(true) {
-      spark.range(2000).select(
-        $"id",
-        ($"id" % 3).as("lo"),
-        $"id".as("hi"),
-        (abs(hash($"id")) % 50).cast("long").as("v"))
-        .write.mode("overwrite")
-        .option("path", s"$warehouse/t").saveAsTable("graft_route_t")
-      spark.sql(
-        "ANALYZE TABLE graft_route_t COMPUTE STATISTICS FOR COLUMNS lo, hi")
-      val t = spark.table("graft_route_t")
-      // lo: 3 distinct (stats-proven ≤ threshold) → size-based rewrites
-      val nt = t.withColumn("nt", ntile(4).over(
-        Window.partitionBy(col("lo")).orderBy(col("v"), col("id"))))
-      assert(nt.queryExecution.executedPlan
-        .collect { case d: DistributedWindowExec => d }.nonEmpty,
-        s"stats-proven low-cardinality ntile must rewrite:\n" +
-          nt.queryExecution.executedPlan)
-      // hi: 2000 distinct — set the threshold below it → non-size-based
-      // routes BACK to WindowExec on stats alone
-      spark.conf.set(DistributedRankRewrite.AutoGroupThresholdKey, "100")
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.cbo.enabled" -> "true", DistributedRank.Flag -> "true") {
       try {
-        val rn = t.withColumn("rn", row_number().over(
-          Window.partitionBy(col("hi")).orderBy(col("v"), col("id"))))
-        assert(rn.queryExecution.executedPlan
-          .collect { case w: WindowExec => w }.nonEmpty &&
-          rn.queryExecution.executedPlan
-            .collect { case d: DistributedWindowExec => d }.isEmpty,
-          "stats-proven high-cardinality key must stay WindowExec")
-      } finally
-        spark.conf.unset(DistributedRankRewrite.AutoGroupThresholdKey)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_route_t")
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.range(2000).select(
+          $"id",
+          ($"id" % 3).as("lo"),
+          $"id".as("hi"),
+          (abs(hash($"id")) % 50).cast("long").as("v"))
+          .write.mode("overwrite")
+          .option("path", s"$warehouse/t").saveAsTable("graft_route_t")
+        spark.sql(
+          "ANALYZE TABLE graft_route_t COMPUTE STATISTICS FOR COLUMNS lo, hi")
+        val t = spark.table("graft_route_t")
+        // lo: 3 distinct (stats-proven ≤ threshold) → size-based rewrites
+        val nt = t.withColumn("nt", ntile(4).over(
+          Window.partitionBy(col("lo")).orderBy(col("v"), col("id"))))
+        assert(nt.queryExecution.executedPlan
+          .collect { case d: DistributedWindowExec => d }.nonEmpty,
+          s"stats-proven low-cardinality ntile must rewrite:\n" +
+            nt.queryExecution.executedPlan)
+        // hi: 2000 distinct — set the threshold below it → non-size-based
+        // routes BACK to WindowExec on stats alone
+        spark.conf.set(DistributedRankRewrite.AutoGroupThresholdKey, "100")
+        try {
+          val rn = t.withColumn("rn", row_number().over(
+            Window.partitionBy(col("hi")).orderBy(col("v"), col("id"))))
+          assert(rn.queryExecution.executedPlan
+            .collect { case w: WindowExec => w }.nonEmpty &&
+            rn.queryExecution.executedPlan
+              .collect { case d: DistributedWindowExec => d }.isEmpty,
+            "stats-proven high-cardinality key must stay WindowExec")
+        } finally
+          spark.conf.unset(DistributedRankRewrite.AutoGroupThresholdKey)
+      } finally spark.sql("DROP TABLE IF EXISTS graft_route_t")
     }
   }
 
@@ -1193,8 +1173,7 @@ class DistributedRankSpec extends AnyFunSuite {
     val on = marked.columns.filter(_.startsWith(s"${M}_"))
       .foldLeft(marked)((d, c) =>
         d.withColumnRenamed(c, c.stripPrefix(s"${M}_")))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = on.queryExecution.executedPlan
       assert(plan.collect { case e: DistributedWindowExec => e }.nonEmpty,
         s"expected DistributedWindowExec:\n$plan")
@@ -1203,7 +1182,7 @@ class DistributedRankSpec extends AnyFunSuite {
       // makes the straddle real)
       assert(plan.collect { case e: ShuffleExchangeExec => e }.size == 1,
         s"expected the pre-partitioning to satisfy the requirement:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     assert(on.collect().map(_.toString).sorted.toSeq == off,
       "straddled peer runs must merge across partitions")
   }
@@ -1289,13 +1268,12 @@ class DistributedRankSpec extends AnyFunSuite {
     // not row-bounded, so no fixed-depth ring replays it
     val w = Window.orderBy(col("v")).rangeBetween(-5, Window.currentRow)
     val (plan, declined) = withFlag(true) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConf("spark.sql.adaptive.enabled" -> "false") {
         val d = fixture(500).withColumn("rs", sum(col("v")).over(w))
         val p = d.queryExecution.executedPlan
         d.collect()
         (p, DistributedRankDiagnostics.declined)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
     }
     assert(plan.collect { case we: WindowExec => we }.nonEmpty,
       s"a RANGE offset frame must stay on WindowExec:\n$plan")
@@ -1472,8 +1450,7 @@ class DistributedRankSpec extends AnyFunSuite {
     // every two-pass family: running agg, retract-ring rolling frame,
     // RANGE peer agg, rank, and a decimal running sum.
     import spark.implicits._
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = spark.range(4000).select(
         $"id",
         (abs(hash(concat(lit("g"), $"id"))) % 5).cast("long").as("flag"),
@@ -1526,6 +1503,6 @@ class DistributedRankSpec extends AnyFunSuite {
         assert(outSeq == childSeq,
           "GlobalRankExec must emit child rows in child order")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 }

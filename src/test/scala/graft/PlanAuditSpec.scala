@@ -17,15 +17,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * static `executedPlan` is a bare AdaptiveSparkPlanExec leaf and every
   * collect over it would pass vacuously.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = graft.core.Sessions.local(4, "graft-planaudit-test")
   val sfDir = "/root/testdata/sf0.001"
 
-  private def staticPlan[A](df: => DataFrame): SparkPlan = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def staticPlan[A](df: => DataFrame): SparkPlan =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      df.queryExecution.executedPlan
+    }
 
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
     p.collect { case s: FileSourceScanExec => s }

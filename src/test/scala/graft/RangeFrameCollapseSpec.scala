@@ -13,11 +13,11 @@ import graft.plans.{DistributedRank, DistributedRankRewrite, RangeFrameCollapse}
   * equals the native WindowExec plan exactly (decimal/long bit-for-bit,
   * incl. NULL order runs, empty both-PRECEDING frames, duplicate order
   * values, DESC), the plan actually collapses (window over an Aggregate
-  * + join back, no WindowExec over the fact child), the kill switch and
-  * the narrow-child bail keep the native plan, the stats proof auto-routes
+  * + join back, no WindowExec over the fact child), excluding the rule
+  * and the narrow-child bail keep the native plan, the stats proof auto-routes
   * without a marker, and a decomposed stddev over an offset RANGE frame
   * composes through both rules. */
-class RangeFrameCollapseSpec extends AnyFunSuite {
+class RangeFrameCollapseSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = {
     val s = graft.core.Sessions.local(4, "graft-rfc-test")
     DistributedRank.install(s)
@@ -43,10 +43,9 @@ class RangeFrameCollapseSpec extends AnyFunSuite {
       .withColumn("xl", ($"xd" * 100).cast("long"))
   }
 
-  private def withRule[T](on: Boolean)(body: => T): T = {
-    spark.conf.set(RangeFrameCollapse.Flag, on.toString)
-    try body finally spark.conf.set(RangeFrameCollapse.Flag, "true")
-  }
+  private def withRule[T](on: Boolean)(body: => T): T =
+    withConf(ExcludedRules ->
+      (if (on) "" else RangeFrameCollapse.ruleName))(body)
 
   /** All composable functions over three offset frames, marker optional.
     * DESC rides a separate query ([[qDesc]]): ASC and DESC windows split
@@ -123,18 +122,28 @@ class RangeFrameCollapseSpec extends AnyFunSuite {
   }
 
   test("kill switch and missing marker keep the native WindowExec plan") {
+    // the kill switch is Spark's spark.sql.optimizer.excludedRules; this
+    // is the name the scaladoc tells users to exclude
+    assert(RangeFrameCollapse.ruleName == "graft.plans.RangeFrameCollapse")
     val df = fixture(500)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val off = withRule(false) {
         q(df, "xl", marker = true).queryExecution.executedPlan }
       assert(off.exists(_.isInstanceOf[WindowExec]),
         s"kill switch must keep WindowExec:\n$off")
+      val offLogical = withRule(false) {
+        q(df, "xl", marker = true).queryExecution.optimizedPlan }
+      assert(offLogical.collect { case j: LJoin => j }.isEmpty,
+        s"kill switch must not add the join-back:\n$offLogical")
       val unmarked = q(df, "xl", marker = false)
         .queryExecution.executedPlan
       assert(unmarked.exists(_.isInstanceOf[WindowExec]),
         s"no marker + no stats must keep WindowExec:\n$unmarked")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    // the excluded plan's values are the collapsed plan's, bit for bit
+    val collapsed = rows(q(df, "xl", marker = true))
+    val excluded = withRule(false)(rows(q(df, "xl", marker = true)))
+    assertExact(excluded, collapsed)
   }
 
   test("narrow-child bail: a child below the window that is not a " +

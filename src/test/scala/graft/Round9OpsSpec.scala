@@ -60,8 +60,6 @@ class Round9OpsSpec extends AnyFunSuite {
     val atN2 = Graph.corenessLabels(spark, edges, Graph.CorenessRounds + 2)
     val a = atN.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = atN2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    atN.unpersist(blocking = false)
-    atN2.unpersist(blocking = false)
     assert(a == b, "coreness labels still moving after CorenessRounds — raise the bound")
   }
 

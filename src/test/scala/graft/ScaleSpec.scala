@@ -12,7 +12,7 @@ import graft.core.Skew
 /** Scale-mechanics tests: salting correctness and the bucketed co-located
   * join (the documented at-scale swap-in for the lineitem⋈orders fact-fact
   * shuffle, core/Tables.scala scaladoc). */
-class ScaleSpec extends AnyFunSuite {
+class ScaleSpec extends AnyFunSuite with WithConf {
   // getOrCreate reuses the suite-shared session, so warehouse conf set
   // here would be ignored — instead drop tables (purging their location)
   // before re-creating them.
@@ -74,9 +74,8 @@ class ScaleSpec extends AnyFunSuite {
     // and AQE so executedPlan is the real plan — under AQE it is a leaf
     // AdaptiveSparkPlanExec and the shuffle collect would be vacuously
     // empty even for a shuffling plan
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val joined = spark.table("li_bucketed")
         .join(spark.table("ord_bucketed"),
           col("l_orderkey") === col("o_orderkey"))
@@ -98,9 +97,6 @@ class ScaleSpec extends AnyFunSuite {
         case e: ShuffleExchangeExec => e
       }.nonEmpty, "control: unbucketed join should shuffle")
       assert(joined.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
   }
 }

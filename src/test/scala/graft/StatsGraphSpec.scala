@@ -46,10 +46,8 @@ class StatsGraphSpec extends AnyFunSuite {
     // 3-core), the chain nodes peel at k=2 so their coreness is 1
     val g = edgesDf(
       (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6))
-    // corenessLabels returns a CACHED frame (callers unpersist when done)
-    val core = graft.queries.Graph.corenessLabels(spark, g)
-    val labels = core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    core.unpersist(blocking = false)
+    val labels = graft.queries.Graph.corenessLabels(spark, g)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 1L, 6L -> 1L))
     // converged fixpoint: inside the induced 2-core (= K4 here) every

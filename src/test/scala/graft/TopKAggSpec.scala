@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * result equality with the row_number-window formulation, deterministic
   * tie-breaks, degenerate groups, null inputs, and — the point of the
   * operator — a map-side-combinable (Partial → Final) plan. */
-class TopKAggSpec extends AnyFunSuite {
+class TopKAggSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = graft.core.Sessions.local(4, "graft-test")
   val sfDir = "/root/testdata/sf0.001"
 
@@ -48,8 +48,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("the plan partial-aggregates map-side before the exchange") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = SparkEntry.queries("q_topk_native")(spark, sfDir)
         .queryExecution.executedPlan
       val aggs = plan.collect { case a: ObjectHashAggregateExec => a }
@@ -57,7 +56,7 @@ class TopKAggSpec extends AnyFunSuite {
       assert(modes.contains(Partial) || modes.contains(PartialMerge),
         s"no map-side partial aggregation in plan modes $modes\n$plan")
       assert(modes.contains(Final), s"no final aggregation: $modes")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("k must be a positive literal") {

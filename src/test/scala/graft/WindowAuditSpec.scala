@@ -29,7 +29,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Streaming entries are excluded (their builders execute pipelines; plan
   * properties are pinned by StreamsSpec), same as PlanCensus.
   */
-class WindowAuditSpec extends AnyFunSuite {
+class WindowAuditSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession =
     graft.core.Sessions.local(4, "graft-windowaudit-test")
   val sfDir = "/root/testdata/sf0.001"
@@ -119,11 +119,10 @@ class WindowAuditSpec extends AnyFunSuite {
     // values) rows under the prefix window
     n.startsWith("__band") || n.startsWith("__freqkey") || boundedGroupKeys(n)
 
-  private def staticPlan(name: String): SparkPlan = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def staticPlan(name: String): SparkPlan =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+    }
 
   private def globalWindows(p: SparkPlan): Seq[WindowExec] =
     p.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
@@ -174,11 +173,10 @@ class WindowAuditSpec extends AnyFunSuite {
   }
 
   test("q_weighted_median fact window partitions on (flag, band), not flag alone") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan =
-      try SparkEntry.queries("q_weighted_median")(spark, sfDir)
+    val plan = withConf("spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries("q_weighted_median")(spark, sfDir)
         .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val windows = plan.collect { case w: WindowExec => w }
     assert(windows.nonEmpty, "expected window operators in q_weighted_median")
     assert(windows.forall(_.partitionSpec.nonEmpty),

@@ -11,9 +11,10 @@ import graft.plans.{DistributedRank, DistributedRankRewrite, DistributedWindowEx
   * `.withColumn(_, f.over(w))` calls over the SAME (partition, order) —
   * including decomposed stddev/corr shapes whose formula Projects block
   * Spark's CollapseWindow — must plan as ONE DistributedWindowExec, with
-  * values identical to the unmerged (kill-switch) plan; a stack whose
+  * values identical to the unmerged plan (the rule excluded through
+  * `spark.sql.optimizer.excludedRules`); a stack whose
   * upper window consumes the lower window's OUTPUT must NOT merge. */
-class WindowStackMergeSpec extends AnyFunSuite {
+class WindowStackMergeSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = {
     val s = graft.core.Sessions.local(4, "graft-wsm-test")
     DistributedRank.install(s)
@@ -54,18 +55,16 @@ class WindowStackMergeSpec extends AnyFunSuite {
   /** AQE wraps the plan in AdaptiveSparkPlanExec, which hides its children
     * from collect — disable it for the plan-shape probes (the decompose
     * spec's discipline). */
-  private def distWindowExecs(df: => DataFrame): Int = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan.collect {
-      case e: DistributedWindowExec => e
-    }.size
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def distWindowExecs(df: => DataFrame): Int =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      df.queryExecution.executedPlan.collect {
+        case e: DistributedWindowExec => e
+      }.size
+    }
 
-  private def withMerge[T](on: Boolean)(body: => T): T = {
-    spark.conf.set(WindowStackMerge.Flag, on.toString)
-    try body finally spark.conf.set(WindowStackMerge.Flag, "true")
-  }
+  private def withMerge[T](on: Boolean)(body: => T): T =
+    withConf(ExcludedRules ->
+      (if (on) "" else WindowStackMerge.ruleName))(body)
 
   test("a five-deep same-spec stack plans as ONE DistributedWindowExec") {
     val df = stacked(fixture(500))
@@ -74,11 +73,16 @@ class WindowStackMergeSpec extends AnyFunSuite {
   }
 
   test("kill switch restores the stacked plan") {
-    withMerge(false) {
-      val df = stacked(fixture(500))
-      assert(distWindowExecs(df) > 1,
-        "flag off must leave the decompose-separated stack")
+    // the kill switch is Spark's spark.sql.optimizer.excludedRules; this
+    // is the name the scaladoc tells users to exclude
+    assert(WindowStackMerge.ruleName == "graft.plans.WindowStackMerge")
+    def q = stacked(fixture(500)).orderBy(col("g"), col("id"))
+    val (execs, excluded) = withMerge(false) {
+      (distWindowExecs(q), q.collect().toSeq)
     }
+    assert(execs > 1, "rule off must leave the decompose-separated stack")
+    assert(distWindowExecs(q) == 1)
+    assert(excluded == q.collect().toSeq)
   }
 
   test("merged values are identical to the unmerged plan's") {

@@ -10,11 +10,11 @@ import graft.plans.{DistributedRank, DistributedRankRewrite, DistributedWindowEx
 
 /** The stddev/variance window decomposition end to end: decomposed output
   * matches the built-in Welford plan (null pattern exactly, values to fp
-  * tolerance) across frame families and both divide-by-zero modes, the
-  * kill switch restores the native plan, decimal inputs route through
+  * tolerance) across frame families and both divide-by-zero modes,
+  * excluding the rule restores the native plan, decimal inputs route through
   * DistributedWindowExec under the marker with NO WindowExec left, and
   * the decimal path is bit-identical to the exact moments formula. */
-class WindowVarianceDecomposeSpec extends AnyFunSuite {
+class WindowVarianceDecomposeSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = {
     val s = graft.core.Sessions.local(4, "graft-wvd-test")
     DistributedRank.install(s)
@@ -36,10 +36,9 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
       .withColumn("xd", $"x".cast("decimal(12,2)"))
   }
 
-  private def withRule[T](on: Boolean)(body: => T): T = {
-    spark.conf.set(WindowVarianceDecompose.Flag, on.toString)
-    try body finally spark.conf.set(WindowVarianceDecompose.Flag, "true")
-  }
+  private def withRule[T](on: Boolean)(body: => T): T =
+    withConf(ExcludedRules ->
+      (if (on) "" else WindowVarianceDecompose.ruleName))(body)
 
   private def volCols(df: DataFrame, c: String): DataFrame = {
     val w = Window.partitionBy(col("g")).orderBy(col("id"))
@@ -89,8 +88,7 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
 
   test("legacy statisticalAggregate mode: NaN at n=1 replicated") {
     val df = fixture(400)
-    spark.conf.set("spark.sql.legacy.statisticalAggregate", "true")
-    try {
+    withConf("spark.sql.legacy.statisticalAggregate" -> "true") {
       val native = withRule(false)(sortedRows(volCols(df, "x")))
       val decomposed = withRule(true)(sortedRows(volCols(df, "x")))
       // the fixture's id%7==5 group is all-null → n=0 frames; the first
@@ -98,20 +96,31 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
       // legacy contract must surface NaN there, not NULL
       assert(native.exists(r => !r.isNullAt(2) && r.getDouble(2).isNaN))
       assertClose(decomposed, native, 1e-9)
-    } finally
-      spark.conf.set("spark.sql.legacy.statisticalAggregate", "false")
+    }
   }
 
   test("kill switch: rule off keeps the native central-moment window") {
+    // the kill switch is Spark's spark.sql.optimizer.excludedRules; this
+    // is the name the scaladoc tells users to exclude
+    assert(WindowVarianceDecompose.ruleName ==
+      "graft.plans.WindowVarianceDecompose")
     val df = fixture(100)
-    val off = withRule(false) {
-      volCols(df, "x").queryExecution.optimizedPlan.toString
+    val (off, offRows) = withRule(false) {
+      val q = volCols(df, "x")
+      (q.queryExecution.optimizedPlan.toString, sortedRows(q))
     }
     val on = withRule(true) {
       volCols(df, "x").queryExecution.optimizedPlan.toString
     }
     assert(off.contains("stddev_samp") && !off.contains("__wvd_"))
     assert(on.contains("__wvd_") && !on.contains("stddev_samp("))
+    // a new session carries none of the graft rules: its values are the
+    // built-in plan's, and the excluded run must match them exactly
+    val plain = spark.newSession()
+    val builtin = volCols(plain.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema), "x")
+    assert(!builtin.queryExecution.optimizedPlan.toString.contains("__wvd_"))
+    assert(offRows == sortedRows(builtin))
   }
 
   test("decimal input under the marker: routes DistributedWindowExec, " +
@@ -124,14 +133,13 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
       .withColumn(s"${M}_vp", var_pop(col(c)).over(w.rowsBetween(-3, 0)))
       .select(col("id"), col("g"), col(s"${M}_ss").as("ss"),
         col(s"${M}_vp").as("vp"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = q("xd").queryExecution.executedPlan
       assert(plan.exists(_.isInstanceOf[DistributedWindowExec]),
         s"expected DistributedWindowExec in:\n$plan")
       assert(!plan.exists(_.isInstanceOf[WindowExec]),
         s"unexpected WindowExec in:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val dist = sortedRows(q("xd"))
     val native = withRule(false)(sortedRows(q("xd")))
     assertClose(dist, native, 1e-9)
@@ -177,14 +185,13 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
       .withColumn(s"${M}_cr",
         corr(col("xd").cast("double"), col("y")).over(w))
       .select(col("id"), col("g"), col(s"${M}_cr").as("cr"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = q.queryExecution.executedPlan
       assert(plan.exists(_.isInstanceOf[DistributedWindowExec]),
         s"expected DistributedWindowExec in:\n$plan")
       assert(!plan.exists(_.isInstanceOf[WindowExec]),
         s"unexpected WindowExec in:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val dist = sortedRows(q)
     val native = withRule(false)(sortedRows(q))
     assertClose(dist, native, 1e-9)
@@ -259,14 +266,13 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
       .withColumn(s"${M}_rc", expr("regr_count(y, x)").over(w))
       .select(col("id"), col("g"), col(s"${M}_sl").as("sl"),
         col(s"${M}_rc").cast("double").as("rc"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = q.queryExecution.executedPlan
       assert(plan.exists(_.isInstanceOf[DistributedWindowExec]),
         s"expected DistributedWindowExec in:\n$plan")
       assert(!plan.exists(_.isInstanceOf[WindowExec]),
         s"unexpected WindowExec in:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val dist = sortedRows(q)
     val native = withRule(false)(sortedRows(q))
     assertClose(dist, native, 1e-9)
@@ -292,15 +298,13 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
     val native = withRule(false)(sortedRows(momentCols(df, "x")))
     val decomposed = withRule(true)(sortedRows(momentCols(df, "x")))
     assertClose(decomposed, native, 1e-6)
-    spark.conf.set("spark.sql.legacy.statisticalAggregate", "true")
-    try {
+    withConf("spark.sql.legacy.statisticalAggregate" -> "true") {
       val nativeL = withRule(false)(sortedRows(momentCols(df, "x")))
       val decomposedL = withRule(true)(sortedRows(momentCols(df, "x")))
       // first non-null row of a group is an n=1 frame → m2=0 → legacy NaN
       assert(nativeL.exists(r => !r.isNullAt(2) && r.getDouble(2).isNaN))
       assertClose(decomposedL, nativeL, 1e-6)
-    } finally
-      spark.conf.set("spark.sql.legacy.statisticalAggregate", "false")
+    }
   }
 
   test("skew/kurt decimal input under the marker routes " +
@@ -313,14 +317,13 @@ class WindowVarianceDecomposeSpec extends AnyFunSuite {
     def q = df
       .withColumn(s"${M}_sk", skewness(col("xd")).over(w))
       .select(col("id"), col("g"), col(s"${M}_sk").as("sk"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val plan = q.queryExecution.executedPlan
       assert(plan.exists(_.isInstanceOf[DistributedWindowExec]),
         s"expected DistributedWindowExec in:\n$plan")
       assert(!plan.exists(_.isInstanceOf[WindowExec]),
         s"unexpected WindowExec in:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     // manual replay: exact unscaled cents (xd is decimal(12,2) → ×100)
     // summed as DECIMAL(38,0), then the identical double formula
     val manual = sortedRows(df
