@@ -43,9 +43,8 @@ object Sessions {
     * eager persist+count freezes each round before coalescing feedback
     * exists. Results are unchanged by contract (the iterative family
     * pins bit-identical output across shuffle widths —
-    * IterativePerturbationSpec); measured at sf0.1: q_ppr 5.1→3.2 s,
-    * q_hits 5.9→4.1 s, q_pagerank 4.1→3.0 s (BENCH_NOTES.md Round 10,
-    * "Late-round additions").
+    * IterativePerturbationSpec); the one caller, q_components in
+    * [[graft.queries.Graph]], records its measurement there.
     * At 100 TB the same principle sizes the width UP — data-proportional
     * width, not the session default, is the invariant. Restores the
     * previous width on exit. CONCURRENCY CONTRACT (r10 ADVICE): the

@@ -1426,41 +1426,42 @@ object Graph {
        |LEFT JOIN intra USING (brand) CROSS JOIN m
        |ORDER BY brand""".stripMargin
 
-  /** The loop builders run under a narrowed shuffle width
-    * ([[graft.core.Sessions.withShuffleWidth]], measured −15..−35% at
-    * sf0.1, BENCH_NOTES.md Round 10 "Late-round additions"): a loop's
-    * per-round fixed cost scales with the width while every table it touches — node/frontier
-    * vectors AND the co-purchase edge list (≈10⁵ rows at sf0.1) — is far
-    * below one session-width partition's worth, so the session default
-    * is pure overhead ×rounds. Results are unchanged by the family's
-    * own shuffle-width-invariance pin (IterativePerturbationSpec). The
-    * width is sized to the QUERY's data, which is the actual invariant:
-    * a 100-TB deployment sizes the loop width to ITS edge list (up, not
-    * down) — the r9 k-core precedent. Only work
-    * EXECUTED inside the builder narrows (the eager per-round
-    * persist+count); the returned frame's lazy tail plans under the
-    * session width at action time. */
+  /** q_components runs under a fixed shuffle width of 8
+    * ([[graft.core.Sessions.withShuffleWidth]]): its builder executes
+    * eagerly inside the wrapper — the `localCheckpoint` of the
+    * bidirectional strong-edge list and every `minLabelComponents` round
+    * (checkpoint + convergence check) — and each round's node-sized table
+    * is far below one partition's worth at a wide session width. The
+    * returned frame's lazy tail plans under the session width at action
+    * time. Measured on local[4] (4-core box, 6 alternating runs per
+    * side, median wrapped vs unwrapped): at session width 32, sf0.1 3.36
+    * vs 3.94 s (6/6 faster, beyond the unwrapped quartile spread), sf0.01
+    * 2.93 vs 3.24 s (6/6); at session width 4 it is flat. The other loop
+    * builders (pagerank, hits, ppr, label_prop, kcore, bfs_levels) run at
+    * the session width: wrapped, they were flat at width 4 and at sf0.01,
+    * and at width 32 on sf0.1 they won by less than the unwrapped
+    * quartile spread. Results are
+    * unchanged by the family's shuffle-width-invariance pin
+    * (IterativePerturbationSpec). */
   private val IterWidth = 8
-  private def narrowed(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => graft.core.Sessions.withShuffleWidth(s, IterWidth)(f(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_modularity"  -> (qModularity _),
     "q_harmonic_centrality" -> (qHarmonicCentrality _),
-    "q_kcore"       -> narrowed(qKcore),
+    "q_kcore"       -> (qKcore _),
     "q_adamic_adar" -> (qAdamicAdar _),
     "q_assortativity" -> (qAssortativity _),
-    "q_label_prop"  -> narrowed(qLabelProp),
-    "q_ppr"         -> narrowed(qPpr),
+    "q_label_prop"  -> (qLabelProp _),
+    "q_ppr"         -> (qPpr _),
     "q_graph_jaccard" -> (qGraphJaccard _),
-    "q_pagerank"    -> narrowed(qPagerank),
-    "q_hits"        -> narrowed(qHits),
+    "q_pagerank"    -> (qPagerank _),
+    "q_hits"        -> (qHits _),
     "q_triangles"   -> (qTriangles _),
-    "q_bfs_levels"  -> narrowed(qBfsLevels),
+    "q_bfs_levels"  -> (qBfsLevels _),
     "q_item_cf"     -> (qItemCf _),
     "q_degree_dist" -> (qDegreeDist _),
-    "q_components"  -> narrowed(qComponents),
+    "q_components"  -> ((s, d) =>
+      graft.core.Sessions.withShuffleWidth(s, IterWidth)(qComponents(s, d))),
     "q_basket_rules" -> (qBasketRules _),
     "q_clustering_coef" -> (qClusteringCoef _))
 

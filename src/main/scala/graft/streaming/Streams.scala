@@ -146,39 +146,17 @@ object Streams {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, StreamShufflePartitions.toString)
-    try withStateStore(s)(body) finally s.conf.set(key, prev)
+    try body finally s.conf.set(key, prev)
   }
 
-  /** Opt-in RocksDB state store for the whole streaming family (r12
-    * VERDICT item 7): the default HDFS-backed provider keeps every state
-    * row on the executor HEAP — at production stream scale (interval-join
-    * state ~ rows-in-watermark-span, dedup state ~ keys-in-span) the
-    * state store, not the computation, is the binding constraint, and
-    * RocksDB keeps state off-heap with spill-to-disk, bounded block-cache
-    * memory, and changelog checkpointing. Set `spark.graft.streaming
-    * .rocksdb=true` on the session BEFORE a query starts (a stream's
-    * provider is pinned in its checkpoint at first start). Results are
-    * provider-independent by contract — StreamsSpec pins gated-query
-    * parity and provider engagement. Per-query state sizing (bytes/key ×
-    * keys at the watermark span) is tabulated in BENCH_NOTES r13. */
-  val RocksDbFlag = "spark.graft.streaming.rocksdb"
+  /** Spark's RocksDB state store provider. Setting Spark's own
+    * `spark.sql.streaming.stateStore.providerClass` to it before a query
+    * starts keeps state off-heap with spill-to-disk (a stream's provider
+    * is pinned in its checkpoint at first start). Results are
+    * provider-independent by contract; StreamsSpec pins gated-query
+    * parity and provider engagement. */
   private[graft] val RocksDbProviderClass =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private def withStateStore[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val want = java.lang.Boolean.parseBoolean(
-      s.conf.get(RocksDbFlag, "false").trim)
-    if (!want) body
-    else {
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, RocksDbProviderClass)
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
-  }
 
   /** Sentinel event type appended by [[flushedEventsStream]]; its rows
     * exist only to advance the event-time watermark. */
@@ -627,20 +605,18 @@ object Streams {
     val ck = scratch()
     val dim = graft.core.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val q = withStateStore(s) {
-      eventsStream(s, dir)
-        .join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-        .writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
+    val q = eventsStream(s, dir)
+      .join(broadcast(dim), col("user_id") === col("c_custkey"))
+      .groupBy(col("c_mktsegment"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+      .writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory")
+      .queryName(name)
+      .option("checkpointLocation", ck.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
     deleteRecursively(ck)
     s.table(name).orderBy(col("c_mktsegment"))
@@ -730,19 +706,17 @@ object Streams {
     val name = "graft_stream_topk"
     s.catalog.dropTempView(name)
     val ck = scratch()
-    val q = withStateStore(s) {
-      eventsStream(s, dir)
-        .groupBy(col("event_type"))
-        .agg(expr("topk(cast(cast(value as decimal(18,2)) as double), " +
-          "event_id, 3)").as("top"))
-        .writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
+    val q = eventsStream(s, dir)
+      .groupBy(col("event_type"))
+      .agg(expr("topk(cast(cast(value as decimal(18,2)) as double), " +
+        "event_id, 3)").as("top"))
+      .writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory")
+      .queryName(name)
+      .option("checkpointLocation", ck.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
     deleteRecursively(ck)
     s.table(name)

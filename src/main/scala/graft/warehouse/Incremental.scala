@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,8 +23,9 @@ import graft.io.Sinks
   *     `partitionBy(p_year, p_month)` derived from `part_col`, so the
   *     existing-side read partition-prunes to the overlap window instead
   *     of scanning history (TL_combine.sql:189-203 semantics, bounded);
-  *   - one cached frame and one aggregate for every count and the new
-  *     watermark, then the append of its new rows.
+  *   - one observed append: the append's own observation yields every
+  *     count and the new watermark, so the candidates are evaluated by
+  *     that one Spark action alone.
   *
   * The dedup window assumption (late data never arrives more than one
   * watermark behind) is the standard incremental contract; widen the tail
@@ -138,37 +139,44 @@ object Incremental {
     val isFresh = hwm.foldLeft(col(partCol).isNotNull) { (p, w) =>
       p && col(partCol) >= lit(w).cast(DateType)
     }
-    // Fill the cache with every counter AND the new max BEFORE appending,
-    // in one aggregate: writing to factPath invalidates any cached plan
-    // that reads it (Spark recaches by path), so post-append the tail match
-    // would recompute against the already-appended fact and find every
-    // row old. A left join with the DISTINCT tail key tuples keeps the
-    // candidates one-to-one; an equi-join never matches a null key part,
-    // so such rows are always new, as under NOT EXISTS.
+    // A left join with the DISTINCT tail key tuples keeps the candidates
+    // one-to-one; an equi-join never matches a null key part, so such rows
+    // are always new, as under NOT EXISTS.
     val fs = new Path(factPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val flagged = (
-      if (!fs.exists(new Path(factPath))) candidates.withColumn("__new", isFresh)
+    val existed = fs.exists(new Path(factPath))
+    val flagged =
+      if (!existed) candidates.withColumn("__new", isFresh)
       else candidates
         .join(tailScan(spark, factPath, partCol, hwm).select(keyCols.map(col): _*)
           .distinct().withColumn("__in_tail", lit(true)), keyCols, "left")
         .withColumn("__new", isFresh && col("__in_tail").isNull)
-    ).cache()
-    val r = flagged.agg(count(lit(1)), count(col(partCol)), count(when(isFresh, 1)),
-      count(when(col("__new"), 1)), max(when(col("__new"), col(partCol))).cast(StringType))
-      .head()
-    val stats = LoadStats(r.getLong(0), r.getLong(0) - r.getLong(1), r.getLong(2), r.getLong(3))
-    val newMax: Option[String] = Option(r.getString(4))
+    // One job is safe: the tail's file list is fixed at planning, so the
+    // append never matches its own rows. The observation sits below the
+    // filter, so it sees every candidate.
+    val obs = new Observation()
+    flagged
+      .observe(obs, count(lit(1)).as("n"), count(col(partCol)).as("dated"),
+        count(when(isFresh, 1)).as("fresh"), count(when(col("__new"), 1)).as("new"),
+        max(when(col("__new"), col(partCol))).cast(StringType).as("max"))
+      .filter(col("__new"))
+      // the using-join put the key columns first: restore the candidates' order
+      .select(candidates.columns.toSeq.map(col) ++ Seq(
+        year(col(partCol)).as(YearCol), month(col(partCol)).as(MonthCol)): _*)
+      .write.mode("append").partitionBy(YearCol, MonthCol).parquet(factPath)
+    val r = obs.get
+    def counter(k: String): Long = r.getOrElse(k, throw new IllegalStateException(
+      s"the append to $factPath reported no '$k' metric")).asInstanceOf[Long]
+    val stats = LoadStats(counter("n"), counter("n") - counter("dated"),
+      counter("fresh"), counter("new"))
+    // an empty first append leaves a directory with no data files, which
+    // the next read cannot infer a schema from
+    if (!existed && stats.appended == 0) fs.delete(new Path(factPath), true)
 
     if (stats.appended > 0) {
-      // the using-join put the key columns first: restore the candidates' order
-      flagged.filter(col("__new"))
-        .select(candidates.columns.toSeq.map(col) ++ Seq(
-          year(col(partCol)).as(YearCol), month(col(partCol)).as(MonthCol)): _*)
-        .write.mode("append").partitionBy(YearCol, MonthCol).parquet(factPath)
-      // newMax is always defined here: null-partition rows were excluded
-      // before the watermark filter, so appended rows carry real dates
-      val advanced = (hwm, newMax) match {
+      // max is always set here: null-partition rows were excluded before
+      // the watermark filter, so appended rows carry real dates
+      val advanced = (hwm, r.get("max").collect { case m: String => m }) match {
         case (Some(w), Some(m)) => if (w >= m) w else m
         case (_, Some(m)) => m
         case _ => throw new IllegalStateException(
@@ -176,7 +184,6 @@ object Incremental {
       }
       writeWatermark(spark, statePath, table, advanced)
     }
-    flagged.unpersist()
     stats
   }
 }

@@ -92,8 +92,8 @@ class EtlScanSpec extends AnyFunSuite {
     results.foreach(_.release())
     info(s"runAll: $etlJobs jobs, two appendIncremental calls: $incrJobs jobs")
     // on this input the filter-per-rule engine's runAll submitted 33 jobs,
-    // and the two-cache appendIncremental 19 over the two calls
+    // and the one-cache appendIncremental 14 over the two calls
     assert(etlJobs < 33, s"runAll submitted $etlJobs jobs")
-    assert(incrJobs < 19, s"appendIncremental submitted $incrJobs jobs")
+    assert(incrJobs < 14, s"appendIncremental submitted $incrJobs jobs")
   }
 }

@@ -20,6 +20,17 @@ class IncrementalSpec extends AnyFunSuite {
       .select(col("order_id"), col("d").cast("date").as("order_date"), col("amount"))
   }
 
+  /** The fact's parquet data files, relative to `fact`. */
+  private def dataFiles(fact: String): Set[String] = {
+    val root = java.nio.file.Paths.get(fact)
+    val walk = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .map(root.relativize(_).toString).toSet
+    } finally walk.close()
+  }
+
   test("two overlapping batches: no duplicates, watermark advances") {
     val dir = Files.createTempDirectory("graft-inc").toString
     val fact = s"$dir/fact_orders"
@@ -54,21 +65,32 @@ class IncrementalSpec extends AnyFunSuite {
     Incremental.appendIncremental(
       batch((1L, "2024-02-10", 1.0)), fact, state, "fact",
       "order_date", Seq("order_id", "order_date"))
+    val before = dataFiles(fact)
     val s = Incremental.appendIncremental(
       batch((9L, "2024-01-01", 9.0)), fact, state, "fact",
       "order_date", Seq("order_id", "order_date"))
     assert(s.aboveWatermark == 0 && s.appended == 0)
     assert(spark.read.parquet(fact).count() == 1)
+    // the zero-row append still runs its write job, which adds no data file
+    assert(dataFiles(fact) == before && before.size == 1)
   }
 
   test("null-date rows are excluded, counted, and never crash a first batch") {
     val dir = Files.createTempDirectory("graft-inc-null").toString
+    val factDir = new java.io.File(s"$dir/fact")
+    // first-ever batch with no rows at all: nothing counted, and no
+    // schema-less fact directory left behind for the next read to trip on
+    val empty = Incremental.appendIncremental(batch(), s"$dir/fact",
+      s"$dir/state", "fact", "order_date", Seq("order_id"))
+    assert(empty == Incremental.LoadStats(0, 0, 0, 0))
+    assert(!factDir.exists())
     // first-ever batch where EVERY row has a null partition date
     val allNull = batch((1L, null, 1.0), (2L, null, 2.0))
     val s0 = Incremental.appendIncremental(allNull, s"$dir/fact", s"$dir/state",
       "fact", "order_date", Seq("order_id"))
     assert(s0.nullPartition == 2 && s0.appended == 0)
     assert(Incremental.readWatermark(spark, s"$dir/state", "fact").isEmpty)
+    assert(!factDir.exists())
     // mixed batch: the dated row loads, the null row is counted out
     val mixed = batch((3L, "2024-05-01", 3.0), (4L, null, 4.0))
     val s1 = Incremental.appendIncremental(mixed, s"$dir/fact", s"$dir/state",

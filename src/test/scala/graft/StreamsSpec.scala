@@ -13,7 +13,7 @@ import graft.streaming.Streams
 /** Streaming surface tests via MemoryStream — watermarked windowed agg,
   * mapGroupsWithState, and the foreachBatch bridge into the batch library.
   */
-class StreamsSpec extends AnyFunSuite {
+class StreamsSpec extends AnyFunSuite with WithConf {
   lazy val spark: SparkSession = graft.core.Sessions.local(4, "graft-stream-test")
 
   case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -391,10 +391,10 @@ class StreamsSpec extends AnyFunSuite {
     def runBoth(name: String): Unit = {
       val off = Streams.queries(name)(spark, dir)
         .collect().map(_.toString).toSeq
-      spark.conf.set(Streams.RocksDbFlag, "true")
-      val on =
-        try Streams.queries(name)(spark, dir).collect().map(_.toString).toSeq
-        finally spark.conf.set(Streams.RocksDbFlag, "false")
+      val on = withConf("spark.sql.streaming.stateStore.providerClass" ->
+          Streams.RocksDbProviderClass) {
+        Streams.queries(name)(spark, dir).collect().map(_.toString).toSeq
+      }
       assert(on == off, s"$name diverges under the RocksDB state store")
     }
     runBoth("q_stream_tumbling") // windowed agg + kmv-free state eviction
